@@ -241,25 +241,35 @@ object FileStats {
     writeAtomic(fs, sidecarPath(batchDir), body)
   }
 
+  // sidecars are written once per batch (or atomically retrofitted, which
+  // changes mtime and length), so every read goes through a settle-ruled
+  // memo: repeated reads of one snapshot cost one stat per batch dir
+  private val sidecarMemo =
+    new graft.io.SettledMemo[Map[String, Map[String, ColStats]]](64L << 20)
+
   /** Read a batch's sidecar; empty if absent (older commit or no stats). */
   def readSidecar(fs: FileSystem, batchDir: Path): Map[String, Map[String, ColStats]] = {
     val p = sidecarPath(batchDir)
-    if (!fs.exists(p)) return Map.empty
+    sidecarMemo(fs, p, Map.empty) { st =>
+      new String(readAll(fs, p, st.getLen), StandardCharsets.UTF_8).split("\n")
+        .map(_.trim).filter(_.nonEmpty)
+        .map(_.split("\t", -1)).collect {
+          // 5-field rows are pre-null-tracking sidecars: nulls unknown (-1)
+          case Array(file, c, tag, mn, mx) => (file, c, ColStats(tag, mn, mx))
+          case Array(file, c, tag, mn, mx, nulls) =>
+            (file, c, ColStats(tag, mn, mx, nulls.toLongOption.getOrElse(-1L)))
+        }
+        .groupBy(_._1)
+        .map { case (f, rows) => f -> rows.map(r => r._2 -> r._3).toMap }
+    }
+  }
+
+  private def readAll(fs: FileSystem, p: Path, len: Long): Array[Byte] = {
     val in = fs.open(p)
-    val bytes = try {
-      val b = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+    try {
+      val b = new Array[Byte](len.toInt)
       in.readFully(b); b
     } finally in.close()
-    new String(bytes, StandardCharsets.UTF_8).split("\n")
-      .map(_.trim).filter(_.nonEmpty)
-      .map(_.split("\t", -1)).collect {
-        // 5-field rows are pre-null-tracking sidecars: nulls unknown (-1)
-        case Array(file, c, tag, mn, mx) => (file, c, ColStats(tag, mn, mx))
-        case Array(file, c, tag, mn, mx, nulls) =>
-          (file, c, ColStats(tag, mn, mx, nulls.toLongOption.getOrElse(-1L)))
-      }
-      .groupBy(_._1)
-      .map { case (f, rows) => f -> rows.map(r => r._2 -> r._3).toMap }
   }
 
   // ---------------------------------------------------------- bloom sidecar
@@ -305,12 +315,11 @@ object FileStats {
     * conservative keep), never an error. */
   def readBloomSidecar(fs: FileSystem, batchDir: Path): Map[String, Map[String, Array[Byte]]] = {
     val p = bloomSidecarPath(batchDir)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val bytes = try {
-      val b = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      in.readFully(b); b
-    } finally in.close()
+    try parseBlooms(readAll(fs, p, fs.getFileStatus(p).getLen))
+    catch { case _: java.io.FileNotFoundException => Map.empty }
+  }
+
+  private def parseBlooms(bytes: Array[Byte]): Map[String, Map[String, Array[Byte]]] =
     new String(bytes, StandardCharsets.UTF_8).split("\n")
       .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
       .flatMap { line =>
@@ -323,6 +332,26 @@ object FileStats {
       }
       .groupBy(_._1)
       .map { case (f, rows) => f -> rows.map(r => r._2 -> r._3).toMap }
+
+  private val bloomMemo = new graft.io.SettledMemo[
+    Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]]](128L << 20)
+
+  /** A batch's bloom filters, DESERIALIZED — the probe side of pruning:
+    * fileName -> col -> filter. Deserialized once per settled sidecar
+    * ([[SettledMemo]]): a probe-per-candidate re-deserialization would
+    * copy the whole bitset (≈120 KB) per planned query. An unreadable
+    * bloom is dropped (absent = conservative keep). */
+  def bloomFilters(fs: FileSystem, batchDir: Path)
+      : Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]] = {
+    val p = bloomSidecarPath(batchDir)
+    bloomMemo(fs, p, Map.empty) { st =>
+      parseBlooms(readAll(fs, p, st.getLen)).map { case (file, byCol) =>
+        file -> byCol.flatMap { case (c, bytes) =>
+          try Some(c -> org.apache.spark.util.sketch.BloomFilter.readFrom(bytes))
+          catch { case scala.util.control.NonFatal(_) => None }
+        }
+      }
+    }
   }
 
   /** Bloom-tracked column NAMES of a batch, metadata-cheap: the `#cols=`

@@ -9,9 +9,13 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** File index that applies the batch sidecars' min/max stats to the DATA
   * filters Catalyst pushes into the scan — so any range/equality predicate
-  * a SQL user writes against the `graft-versioned` format or catalog skips
-  * non-overlapping file OPENS automatically, with no library call
-  * (`Versioned.readPruned` is the explicit-API twin of the same pruning).
+  * skips non-overlapping file OPENS automatically, with no library call.
+  * It is the one index every versioned read plans through: the
+  * `graft-versioned` format and catalog scan (DSv2) and the library reads
+  * (`Versioned.read`, time travel, `readChanges` and every internal
+  * vector-applying read, as a V1 `HadoopFsRelation` — see [[forFiles]]).
+  * `Versioned.readPruned` additionally pre-prunes its file list
+  * explicitly before planning.
   *
   * `listFiles` receives the pushed filters during physical planning; each
   * conjunct shaped like `col <op> literal` tightens a per-column bound map,
@@ -28,18 +32,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * range stats prune nothing, but a per-file bloom answers
   * "could this file contain id = X?" from one driver-side probe per
   * file. The pushed literal is hashed with the SAME xxhash64 the build
-  * side aggregated, a missing/unreadable bloom keeps the file, and the
-  * bloom map is loaded lazily — a scan with no equality predicate never
-  * reads a bloom sidecar.
+  * side aggregated, and a missing/unreadable bloom keeps the file.
+  *
+  * Both sidecar maps are loaded lazily: a scan with no stats-usable
+  * predicate never reads a stats sidecar, and a scan with no equality
+  * predicate never reads a bloom sidecar.
   */
 private[graft] class StatsPrunedFileIndex(
     spark: SparkSession,
     files: Seq[Path],
-    sidecars: Map[(String, String), Map[String, FileStats.ColStats]],
+    sidecars: () => Map[(String, String), Map[String, FileStats.ColStats]],
     runtimeKeep: Option[Set[(String, String)]] = None,
-    blooms: () => Map[(String, String), Map[String, Array[Byte]]] = () => Map.empty,
+    blooms: () => Map[(String, String), Map[String, org.apache.spark.util.sketch.BloomFilter]] = () => Map.empty,
     bloomCols: () => Set[String] = () => Set.empty,
-    parentBlooms: Option[() => Map[(String, String), Map[String, org.apache.spark.util.sketch.BloomFilter]]] = None,
     // the status-cache CLIENT this index lists through. getOrCreate
     // returns an ISOLATED client per call (Spark's per-FileIndex cache
     // keyspace), so a derived keep-set index constructed per prepared-
@@ -69,27 +74,21 @@ private[graft] class StatsPrunedFileIndex(
     * derived its keep-set here; observability only. */
   @volatile var lastRuntimeKept: Int = -1
 
-  /** Bloom sidecars, deserialized ONCE per (file, col) at first use — a
-    * probe-per-candidate re-deserialization would copy the whole bitset
-    * (≈120 KB) thousands of times per planned query. An unreadable bloom
-    * is dropped here (absent = conservative keep). A derived runtime-keep
-    * index shares its parent's already-deserialized map ([[withRuntimeKeep]])
-    * instead of re-reading the sidecars. */
+  /** Stats sidecars, loaded at first use and shared with derived
+    * runtime-keep indexes. */
+  private lazy val sidecarMap: Map[(String, String), Map[String, FileStats.ColStats]] =
+    sidecars()
+
+  /** Bloom filters, loaded at first use. A derived runtime-keep index
+    * shares its parent's already-loaded map ([[withRuntimeKeep]]) instead
+    * of re-reading the sidecars. */
   private lazy val bloomMap: Map[(String, String), Map[String, org.apache.spark.util.sketch.BloomFilter]] =
-    parentBlooms match {
-      case Some(shared) => shared()
-      case None => blooms().map { case (key, byCol) =>
-        key -> byCol.flatMap { case (c, bytes) =>
-          try Some(c -> org.apache.spark.util.sketch.BloomFilter.readFrom(bytes))
-          catch { case scala.util.control.NonFatal(_) => None }
-        }
-      }
-    }
+    blooms()
 
   /** Columns any sidecar carries stats for — the columns runtime (join-
     * driven) filtering can prune on. */
   private[io] lazy val statsColumns: Set[String] =
-    sidecars.valuesIterator.flatMap(_.keysIterator).toSet
+    sidecarMap.valuesIterator.flatMap(_.keysIterator).toSet
 
   /** Columns runtime filtering can act on at all: min/max-tracked OR
     * bloom-tracked (a bloom-only column still prunes point lookups;
@@ -118,7 +117,7 @@ private[graft] class StatsPrunedFileIndex(
       if (vs.nonEmpty && hs.forall(_.isDefined)) Some(c -> hs.flatten) else None
     }.toMap
     files.iterator.map(p => (p.getParent.getName, p.getName)).filter { key =>
-      val byCol = sidecars.getOrElse(key, Map.empty)
+      val byCol = sidecarMap.getOrElse(key, Map.empty)
       sets.forall { case (c, vs) =>
         // decode this file's [min,max] once, then probe the whole
         // candidate set — a join-driven set can carry thousands of keys
@@ -139,8 +138,8 @@ private[graft] class StatsPrunedFileIndex(
     * shared by every scan of the table, so runtime filters must NOT mutate
     * it — a self-join's two scans carry different runtime predicates. */
   private[graft] def withRuntimeKeep(keep: Set[(String, String)]): StatsPrunedFileIndex =
-    new StatsPrunedFileIndex(spark, files, sidecars, Some(keep), blooms,
-      bloomCols, Some(() => this.bloomMap), sharedStatusCache)
+    new StatsPrunedFileIndex(spark, files, () => sidecarMap, Some(keep),
+      () => bloomMap, bloomCols, sharedStatusCache)
 
   /** Per-file point-containment probes for `column`, each file's [min,max]
     * decoded ONCE at build ([[FileStats.containsProbe]]) — the prepared
@@ -158,7 +157,7 @@ private[graft] class StatsPrunedFileIndex(
       files.toIndexedSeq.map { p =>
         val key = (p.getParent.getName, p.getName)
         key -> FileStats.containsProbe(
-          sidecars.getOrElse(key, Map.empty).get(column))
+          sidecarMap.getOrElse(key, Map.empty).get(column))
       }
     values => probes.collect {
       case (key, probe) if values.exists(probe) => key
@@ -177,7 +176,7 @@ private[graft] class StatsPrunedFileIndex(
       val pruned = listed.map { pd =>
         pd.copy(files = pd.files.filter { f =>
           val key = (f.getPath.getParent.getName, f.getPath.getName)
-          val byCol = sidecars.getOrElse(key, Map.empty)
+          lazy val byCol = sidecarMap.getOrElse(key, Map.empty)
           runtimeKeep.forall(_.contains(key)) &&
           bounds.forall { case (c, (lo, hi)) =>
             FileStats.mayContain(byCol.get(c), lo, hi)
@@ -205,6 +204,45 @@ private[graft] class StatsPrunedFileIndex(
 }
 
 private[graft] object StatsPrunedFileIndex {
+
+  /** The index over one snapshot's `files` (absolute paths), with both
+    * sidecar maps loaded lazily per batch dir through the memoized
+    * readers ([[FileStats.readSidecar]], [[FileStats.bloomFilters]]) and
+    * keyed (batchDirName, fileName), so two part files with the same name
+    * in different batches can never borrow each other's stats (a wrong
+    * borrow could prune a file that holds matching rows). Entries under a
+    * `deadCols` name (lower-cased; see `Versioned.statsDeadColumns`) are
+    * dropped before any probe, so no read ever prunes on an
+    * identity-unstable name — the same rule the stats proofs apply. */
+  def forFiles(spark: SparkSession, files: Seq[String],
+               deadCols: () => Set[String] = () => Set.empty): StatsPrunedFileIndex = {
+    val paths = files.map(new Path(_))
+    val dirs = paths.map(_.getParent).distinct
+    val hconf = spark.sparkContext.hadoopConfiguration
+    // per-dir filesystem: a shallow clone's entries may live on another
+    // filesystem than the table root
+    def perDir[V](read: (org.apache.hadoop.fs.FileSystem, Path) => Map[String, Map[String, V]])
+        : Map[(String, String), Map[String, V]] = {
+      lazy val dead = deadCols()
+      dirs.iterator.flatMap { dir =>
+        read(dir.getFileSystem(hconf), dir).iterator.map { case (name, byCol) =>
+          (dir.getName, name) -> byCol.filter { case (c, _) => !dead.contains(c.toLowerCase) }
+        }
+      }.toMap
+    }
+    new StatsPrunedFileIndex(spark, paths,
+      sidecars = () => perDir(FileStats.readSidecar),
+      blooms = () => perDir(FileStats.bloomFilters),
+      bloomCols = () => {
+        val dead = deadCols()
+        dirs.iterator.flatMap(dir => FileStats.readBloomColumns(dir.getFileSystem(hconf), dir))
+          .filterNot(c => dead.contains(c.toLowerCase)).toSet
+      },
+      // an explicit cache client, so per-call keep-set derivations
+      // (VersionedReadTable.withKeep) re-list through hits instead of a
+      // job per search
+      statusCache = FileStatusCache.getOrCreate(spark))
+  }
 
   /** Per-column [lo, hi] bounds implied by the pushed conjuncts; columns
     * with no recognizable bound are absent (never pruned on). */

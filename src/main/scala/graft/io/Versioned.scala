@@ -57,52 +57,27 @@ object Versioned {
 
   // Published manifests are immutable, but a root can be dropped and
   // recreated under the same path (same vN.txt name, new content) — so
-  // the memo keys on (path, mtime, length), turning the several reads a
-  // single commit makes of the SAME v<prev>.txt (checkLines,
-  // droppedLines, dvEntries, manifestFiles — one open+readFully each)
-  // into one stat + one read. Version-not-found stays loud: every
-  // explicit-asOf surface checks versions() membership BEFORE reading,
-  // never relying on the open failing.
-  private val manifestMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Seq[String]]()
-
-  // The (path, mtime, length) key is only collision-free once the file's
-  // mtime tick is safely in the past: stores round mtime coarsely (S3A's
-  // HTTP Last-Modified is 1-second; some local filesystems too), so a
-  // root dropped and recreated within the SAME tick could produce a
-  // same-length v<N>.txt with an identical key and the memo would serve
-  // the old root's manifest. A recreated file always carries a
-  // fresh≈now mtime, so refusing to MEMOIZE anything whose mtime is
-  // within this margin of now closes the hole: every cached entry's
-  // mtime tick predates the caching instant by more than any plausible
-  // granularity, and no later file at that path can land in that tick.
-  // Fresh manifests (the read-own-commit window) just re-read a tiny
-  // file a few times — correctness over a micro-optimization.
-  private[graft] val memoSettleMillis = 5000L
+  // the memo keys on (path, mtime, length) under the settle rule of
+  // [[SettledMemo]], turning the several reads a single commit makes of
+  // the SAME v<prev>.txt (checkLines, droppedLines, dvEntries,
+  // manifestFiles — one open+readFully each) into one stat + one read.
+  // Version-not-found stays loud: every explicit-asOf surface checks
+  // versions() membership BEFORE reading, never relying on the open
+  // failing.
+  private val manifestMemo = new SettledMemo[Seq[String]](64L << 20)
 
   private def manifestLines(spark: SparkSession, root: String, v: Long): Seq[String] = {
     val p = new Path(manifestDir(root), s"v$v.txt")
     val f = fs(spark, p)
-    val st = f.getFileStatus(p)
-    val key = (p.toString, st.getModificationTime, st.getLen)
-    val hit = manifestMemo.get(key)
-    if (hit != null) return hit
-    val in = f.open(p)
-    val lines =
+    manifestMemo(f, p, throw new java.io.FileNotFoundException(s"manifest $p does not exist")) { st =>
+      val in = f.open(p)
       try {
         val bytes = new Array[Byte](st.getLen.toInt)
         in.readFully(bytes)
         new String(bytes, StandardCharsets.UTF_8).split("\n").toSeq
           .map(_.trim).filter(_.nonEmpty)
       } finally in.close()
-    // settled files only; a future mtime (clock skew) is also unsettled
-    val settled =
-      st.getModificationTime < System.currentTimeMillis() - memoSettleMillis
-    if (settled) {
-      if (manifestMemo.size > 1024) manifestMemo.clear() // bounded, not LRU
-      manifestMemo.put(key, lines)
     }
-    lines
   }
 
   private def manifestFiles(spark: SparkSession, root: String, v: Long): Seq[String] =
@@ -257,7 +232,7 @@ object Versioned {
     val current = vs.last
     val prev = snapshotSchema(spark, root, Some(current)).getOrElse(
       ColumnIds.stripIds(
-        readWithSchema(spark, None, snapshotFiles(spark, root, Some(current))).schema))
+        readWithSchema(spark, root, None, snapshotFiles(spark, root, Some(current))).schema))
     val byLower = prev.fields.map(f => f.name.toLowerCase -> f.name).toMap
     val missing = cols.filterNot(c => byLower.contains(c.toLowerCase))
     // a missing DOTTED name is almost always an attempted nested-field
@@ -521,7 +496,7 @@ object Versioned {
     val current = vs.last
     val prev = snapshotSchema(spark, root, Some(current)).getOrElse(
       ColumnIds.stripIds(
-        readWithSchema(spark, None, snapshotFiles(spark, root, Some(current))).schema))
+        readWithSchema(spark, root, None, snapshotFiles(spark, root, Some(current))).schema))
     val clash = fields.map(_.name.toLowerCase)
       .intersect(prev.fieldNames.map(_.toLowerCase).toSeq)
     require(clash.isEmpty, s"column(s) already exist: ${clash.mkString(", ")}")
@@ -687,17 +662,43 @@ object Versioned {
         "versioned tables resolve columns case-insensitively; rename one side")
   }
 
-  private def readWithSchema(spark: SparkSession, schema: Option[StructType],
-                             files: Seq[String]): DataFrame = schema match {
-    case Some(s) =>
-      // a mapped (id-carrying) schema matches file columns BY ID, so
-      // files written before a rename serve the renamed column correctly
-      // (ensureReadConfs also turns nested pruning off when NESTED ids
-      // ride the schema — pruned projections would null a renamed
-      // struct's fields otherwise)
-      if (ColumnIds.hasIds(s)) ColumnIds.ensureReadConfs(spark, s)
-      spark.read.schema(s).parquet(files: _*)
-    case None => spark.read.parquet(files: _*)
+  /** Plain (vector-blind) read of `files` (absolute paths) under `schema`
+    * (footer-inferred when None): a V1 parquet relation over
+    * [[StatsPrunedFileIndex]], so Catalyst-pushed equality, IN and range
+    * filters skip file opens using the batch sidecars' min/max and bloom
+    * filters — loaded only when a pushed filter can use them, never under
+    * an identity-unstable (`#statsdead`) name. Every library read plans
+    * through here; vectors are applied on top by [[liveWithKeys]]. */
+  private def readWithSchema(spark: SparkSession, root: String,
+                             schema: Option[StructType], files: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    // a mapped (id-carrying) schema matches file columns BY ID, so files
+    // written before a rename serve the renamed column correctly
+    // (ensureReadConfs also turns nested pruning off when NESTED ids ride
+    // the schema — pruned projections would null a renamed struct's
+    // fields otherwise)
+    schema.filter(ColumnIds.hasIds).foreach(ColumnIds.ensureReadConfs(spark, _))
+    val index = StatsPrunedFileIndex.forFiles(spark, files,
+      () => statsDeadColumns(spark, root))
+    // the listing silently drops a missing root path; a snapshot file
+    // that is gone must fail the read, as a path read would
+    val listed = index.allFiles()
+    if (listed.size < files.distinct.size) {
+      val found = listed.map(_.getPath.toUri.getPath).toSet
+      val missing = files.filterNot(u => found(new Path(u).toUri.getPath))
+      throw new java.io.FileNotFoundException(
+        s"snapshot file(s) missing at $root: ${missing.take(3).mkString(", ")}")
+    }
+    val format = new ParquetFileFormat
+    // footer-inferred = legacy table: strip any ids inference may surface
+    // (its files were not uniformly stamped by this module)
+    val dataSchema = schema
+      .orElse(format.inferSchema(spark, Map.empty, listed).map(ColumnIds.stripIds))
+      .getOrElse(throw new IllegalArgumentException(
+        s"cannot infer a schema for $root: no recorded schema and no data files"))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+      dataSchema.toNullable, None, format, Map.empty)(spark))
   }
 
   /** Commit `df` as the next version. `replace = true` makes the new
@@ -1020,11 +1021,13 @@ object Versioned {
   // disaster for scattered point-deletes: removing 1 row from each of
   // 10,000 files rewrites 10,000 files. deleteWhereDv instead records the
   // dead row ORDINALS in a per-file sidecar vector ([[Dv]]) and publishes a
-  // metadata-sized commit; readers apply the vectors (one anti-join on
-  // (file, ordinal)), and the rewrite cost is deferred to
-  // dvMaterialize/compaction where it amortizes. This is Delta's deletion
-  // vectors / Iceberg's position deletes, restated for the manifest
-  // protocol. Manifest directive per affected file:
+  // metadata-sized commit; readers apply the vectors as a row filter on
+  // (file, `_metadata.row_index`) inside the scan ([[liveWithKeys]],
+  // [[DvLive]]; a shuffle anti-join past spark.graft.dv.broadcastRows),
+  // and the rewrite cost is deferred to dvMaterialize/compaction where it
+  // amortizes. This is Delta's deletion vectors / Iceberg's position
+  // deletes, restated for the manifest protocol. Manifest directive per
+  // affected file:
   //
   //   #dv=<data-file-entry>\t<vector-entry>
   //
@@ -1080,24 +1083,20 @@ object Versioned {
     s"${p.getParent.getName}/${p.getName}"
   }
 
-  /** (file-suffix, ordinal) pairs of every deleted row across `pairs`
-    * (suffix -> vector absolute path), plus the total cardinality (from
-    * the vectors' fixed headers — priced before any parse). Vector parsing
-    * runs on executors; only names cross the driver. */
+  /** (file-suffix, ordinal) pairs of every deleted row across `vectors`
+    * (suffix -> vector absolute path), parsed on executors — the build
+    * side of the shuffle anti-join [[liveWithKeys]] falls back to past
+    * `spark.graft.dv.broadcastRows`; only names cross the driver. */
   private def deletedPairs(spark: SparkSession,
-                           pairs: Seq[(String, String)]): (DataFrame, Long) = {
+                           vectors: Seq[(String, String)]): DataFrame = {
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val total = MetaPar.parMap(pairs) { case (_, d) =>
-      val p = new Path(d); Dv.count(p.getFileSystem(hconf), p)
-    }.sum
-    val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
-    val df = spark.createDataset(pairs)
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    spark.createDataset(vectors)
       .flatMap { case (sfx, dvPath) =>
         val p = new Path(dvPath)
         Dv.read(p.getFileSystem(conf.value), p).iterator.map(o => (sfx, o))
       }.toDF("__graft_sfx", "__graft_ord")
-    (df, total)
   }
 
   /** Attach the vector join keys to a raw parquet read: the file suffix
@@ -1111,31 +1110,16 @@ object Versioned {
   }
 
   /** Read `files` (absolute paths) with any deletion vectors in `dv`
-    * applied. Files without a vector read through the untouched native
-    * path; vectored files pay one anti-join against their dead
-    * (file, ordinal) pairs — broadcast while the total cardinality stays
-    * under `spark.graft.dv.broadcastRows` (default 4M), the regime
-    * vectors exist for (past it, materialize). */
+    * applied — the vector-applying twin of [[readWithSchema]] behind
+    * [[read]], time travel, [[readChanges]] and every copy-on-write
+    * rewrite. One scan over all of `files` (pushed filters still prune
+    * through the shared file index); see [[liveWithKeys]] for how the
+    * vectors are applied. */
   private def readFilesDv(spark: SparkSession, root: String,
                           schema: Option[StructType], files: Seq[String],
-                          dv: Map[String, String]): DataFrame = {
-    if (dv.isEmpty || files.isEmpty) return readWithSchema(spark, schema, files)
-    val dvAbs: Map[String, String] = dv.map { case (e, d) =>
-      resolveEntry(root, e).toString -> resolveEntry(root, d).toString }
-    val (dead, clean) = files.partition(dvAbs.contains)
-    if (dead.isEmpty) return readWithSchema(spark, schema, files)
-    val (pairsDf, total) = deletedPairs(spark,
-      dead.map(f => (pathSuffix(f), dvAbs(f))))
-    val limit = spark.conf.get("spark.graft.dv.broadcastRows", "4000000").toLong
-    val dvSide =
-      if (total <= limit) org.apache.spark.sql.functions.broadcast(pairsDf)
-      else pairsDf
-    val kept = withDvKeys(readWithSchema(spark, schema, dead))
-      .join(dvSide, Seq("__graft_sfx", "__graft_ord"), "left_anti")
-      .drop("__graft_sfx", "__graft_ord")
-    if (clean.isEmpty) kept
-    else readWithSchema(spark, schema, clean).unionByName(kept)
-  }
+                          dv: Map[String, String]): DataFrame =
+    if (oldDvBySfx(root, dv, files).isEmpty) readWithSchema(spark, root, schema, files)
+    else liveWithKeys(spark, root, schema, files, dv).drop("__graft_sfx", "__graft_ord")
 
   /** Merge-on-read row-level DELETE: rows where `predicate` is TRUE are
     * recorded dead in per-file deletion vectors; FALSE and NULL stay (SQL
@@ -1156,7 +1140,8 @@ object Versioned {
     * versions still shows the rows. Returns the new version, or the
     * current one untouched if nothing matched. */
   def deleteWhereDv(spark: SparkSession, root: String,
-                    predicate: org.apache.spark.sql.Column): Long = {
+                    predicate: org.apache.spark.sql.Column): Long =
+      graft.JobDesc(spark, s"versioned deleteWhereDv: $root") {
     val vs = versions(spark, root)
     require(vs.nonEmpty, s"no committed versions at $root")
     val current = vs.last
@@ -1217,21 +1202,36 @@ object Versioned {
 
   /** Read `files` with existing vectors applied, KEEPING the vector join
     * keys (`__graft_sfx`, `__graft_ord`) — the probe frame every
-    * merge-on-read writer filters to find its doomed rows. */
+    * merge-on-read writer filters to find its doomed rows, and (keys
+    * dropped) [[readFilesDv]]. While the vectors' total cardinality (from
+    * their fixed headers — priced before any parse) stays under
+    * `spark.graft.dv.broadcastRows` (default 4M), the regime vectors exist
+    * for, they are decoded once on the driver, shipped in ONE broadcast
+    * variable and applied as a row filter inside the scan's stage
+    * ([[DvLive]]) — no join, no build-side job, and the scan keeps its
+    * file pruning. Past it, the executors parse the vectors and a
+    * shuffle anti-join on (file, ordinal) drops the dead rows (past it,
+    * materialize). */
   private def liveWithKeys(spark: SparkSession, root: String,
                            schema: Option[StructType], files: Seq[String],
                            dv: Map[String, String]): DataFrame = {
-    val base = withDvKeys(readWithSchema(spark, schema, files))
-    val deadPairs = oldDvBySfx(root, dv, files).toSeq
-    if (deadPairs.isEmpty) base
-    else {
-      val (pairsDf, total) = deletedPairs(spark, deadPairs)
-      val limit = spark.conf.get("spark.graft.dv.broadcastRows", "4000000").toLong
-      val dvSide =
-        if (total <= limit) org.apache.spark.sql.functions.broadcast(pairsDf)
-        else pairsDf
-      base.join(dvSide, Seq("__graft_sfx", "__graft_ord"), "left_anti")
-    }
+    import org.apache.spark.sql.functions.col
+    val base = withDvKeys(readWithSchema(spark, root, schema, files))
+    val vectors = oldDvBySfx(root, dv, files).toSeq
+    if (vectors.isEmpty) return base
+    val hconf = spark.sparkContext.hadoopConfiguration
+    def vecFs(p: Path) = p.getFileSystem(hconf)
+    val total = MetaPar.parMap(vectors) { case (_, d) =>
+      val p = new Path(d); Dv.count(vecFs(p), p)
+    }.sum
+    val limit = spark.conf.get("spark.graft.dv.broadcastRows", "4000000").toLong
+    if (total <= limit) {
+      val dead = MetaPar.parMap(vectors) { case (sfx, d) =>
+        val p = new Path(d); sfx -> Dv.read(vecFs(p), p)
+      }.toMap
+      base.filter(DvLive.column(col("__graft_sfx"), col("__graft_ord"),
+        spark.sparkContext.broadcast(dead)))
+    } else base.join(deletedPairs(spark, vectors), Seq("__graft_sfx", "__graft_ord"), "left_anti")
   }
 
   /** Write one merged deletion vector per file holding a `doomed` row
@@ -1424,7 +1424,8 @@ object Versioned {
     * the table exactly (no schema evolution on this path — evolve with
     * an append commit or the copy-on-write merge first). */
   def mergeIntoDv(spark: SparkSession, root: String, source: DataFrame,
-                  keys: Seq[String], tag: Option[String] = None): Long = {
+                  keys: Seq[String], tag: Option[String] = None): Long =
+      graft.JobDesc(spark, s"versioned mergeIntoDv: $root") {
     import org.apache.spark.sql.functions.{col, count, lit}
     require(keys.nonEmpty, "mergeIntoDv needs at least one key column")
     val missingKeys = keys.filterNot(source.columns.contains)
@@ -1447,7 +1448,7 @@ object Versioned {
     val files = snapshotFiles(spark, root, Some(current))
     val dvNow = dvEntries(spark, root, Some(current))
     val tableSchema: StructType =
-      schema.getOrElse(readWithSchema(spark, None, files).schema)
+      schema.getOrElse(readWithSchema(spark, root, None, files).schema)
     val snapshotCols = tableSchema.fieldNames.toSeq
     val extra = source.columns.filterNot(snapshotCols.contains)
     require(extra.isEmpty,
@@ -1635,7 +1636,8 @@ object Versioned {
     * refusing until a final full materialize. Returns the new version
     * (unchanged if there are no vectors, or none reach the threshold). */
   def dvMaterialize(spark: SparkSession, root: String,
-                    minDeadRatio: Double = 0.0): Long = {
+                    minDeadRatio: Double = 0.0): Long =
+      graft.JobDesc(spark, s"versioned dvMaterialize: $root") {
     require(minDeadRatio >= 0.0 && minDeadRatio <= 1.0,
       s"minDeadRatio must be in [0, 1], got $minDeadRatio")
     val vs = versions(spark, root)
@@ -1867,7 +1869,8 @@ object Versioned {
     * a silent table mutation. */
   def mergeInto(spark: SparkSession, root: String, source: DataFrame,
                 keys: Seq[String], tag: Option[String] = None,
-                schemaEvolution: Boolean = false): Long = {
+                schemaEvolution: Boolean = false): Long =
+      graft.JobDesc(spark, s"versioned mergeInto: $root") {
     import org.apache.spark.sql.functions.{col, count, input_file_name, lit}
     require(keys.nonEmpty, "mergeInto needs at least one key column")
     val missingKeys = keys.filterNot(source.columns.contains)
@@ -1897,10 +1900,10 @@ object Versioned {
       if (!schemaEvolution) tableSchema
       else Some(mergeSchemas(
         tableSchema.getOrElse(
-          ColumnIds.stripIds(readWithSchema(spark, None, files).schema)),
+          ColumnIds.stripIds(readWithSchema(spark, root, None, files).schema)),
         // never trust ids riding in on the source frame's lineage
         ColumnIds.stripIds(asNullable(source.schema))))
-    val snapshot = readWithSchema(spark, schema, files)
+    val snapshot = readWithSchema(spark, root, schema, files)
     val cols = snapshot.columns.toSeq
     val extra = source.columns.filterNot(cols.contains)
     require(extra.isEmpty,
@@ -1965,7 +1968,7 @@ object Versioned {
       // whenever the planner breaks file context (shuffle join)
       val touchedUris =
         if (probeFiles.isEmpty) Set.empty[String]
-        else collectTouched(spark, readWithSchema(spark, schema, probeFiles)
+        else collectTouched(spark, readWithSchema(spark, root, schema, probeFiles)
           .withColumn("__file", input_file_name())
           .join(srcKeys, keys, "left_semi")
           .select(col("__file")).distinct(), "MERGE")
@@ -2091,7 +2094,7 @@ object Versioned {
         schema.map(s => spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), s))
           .getOrElse(sys.error(s"empty table at $root has no recorded schema"))
-      else readWithSchema(spark, schema, files)
+      else readWithSchema(spark, root, schema, files)
     val cols = snapshot.columns.toSeq
     val needsWholeRow = matched.exists(!_._2) || inserts.nonEmpty
     if (needsWholeRow) {
@@ -2139,7 +2142,7 @@ object Versioned {
         }
       val matchedTouched: Set[String] =
         if (matched.isEmpty || probeFiles.isEmpty) Set.empty
-        else collectTouched(spark, readWithSchema(spark, schema, probeFiles)
+        else collectTouched(spark, readWithSchema(spark, root, schema, probeFiles)
           .withColumn("__file", input_file_name())
           .join(srcKeys, keys, "left_semi")
           .select(col("__file")).distinct(), "MERGE")
@@ -2150,7 +2153,7 @@ object Versioned {
         else {
           val orCond = nmbs.map(_._1.map(coalesce(_, lit(false))).getOrElse(lit(true)))
             .reduce(_ || _)
-          collectTouched(spark, readWithSchema(spark, schema, files)
+          collectTouched(spark, readWithSchema(spark, root, schema, files)
             .withColumn("__file", input_file_name())
             .join(srcKeys, keys, "left_anti")
             .alias("__t")
@@ -2477,15 +2480,6 @@ object Versioned {
     d.withColumn("_change_type", label).drop("_change")
   }
 
-  /** Collect the touched-file probe's distinct file URIs to the driver,
-    * capped. The collect carries file NAMES, never row data, so it is
-    * bounded by file count — but a predicate matching most of a
-    * multi-million-file table would still build a driver set of millions
-    * of paths. Past `spark.graft.maxTouchedFiles` (default 1,000,000 —
-    * ~100 MB of paths, the same class of driver-side metadata bound Delta
-    * accepts) the operation fails LOUDLY with a rewrite-in-ranges hint
-    * instead of silently stressing the driver; the limit also bounds the
-    * fetch itself. */
   /** ONE source-probe aggregation serving the three separate actions
     * every merge writer paid per call — the duplicate-fully-keyed-key
     * check, the source emptiness check and the single-key min/max
@@ -2522,6 +2516,15 @@ object Versioned {
     s"source has multiple rows per key (${keys.mkString(", ")}): " +
       "MERGE would update the same target row twice"
 
+  /** Collect the touched-file probe's distinct file URIs to the driver,
+    * capped. The collect carries file NAMES, never row data, so it is
+    * bounded by file count — but a predicate matching most of a
+    * multi-million-file table would still build a driver set of millions
+    * of paths. Past `spark.graft.maxTouchedFiles` (default 1,000,000 —
+    * ~100 MB of paths, the same class of driver-side metadata bound Delta
+    * accepts) the operation fails LOUDLY with a rewrite-in-ranges hint
+    * instead of silently stressing the driver; the limit also bounds the
+    * fetch itself. */
   private def collectTouched(spark: SparkSession,
                              fileUris: DataFrame, what: String): Set[String] = {
     val cap = spark.conf.get("spark.graft.maxTouchedFiles", "1000000").toInt
@@ -2595,7 +2598,7 @@ object Versioned {
     // canonical Path forms
     val touchedUris =
       if (undecided.isEmpty) Set.empty[String]
-      else collectTouched(spark, readWithSchema(spark, schema, undecided)
+      else collectTouched(spark, readWithSchema(spark, root, schema, undecided)
         .filter(predicate)
         .select(input_file_name()).distinct(), "row-level rewrite")
     val (scanTouched, scanCarried) = undecided.partition(p =>
@@ -2638,12 +2641,13 @@ object Versioned {
 
   /** Union of the bloom columns any batch bloom-sidecar of `files` tracks
     * — the set a rewrite must re-harvest so point-lookup skipping
-    * survives it. */
+    * survives it. Names come from the sidecars' headers: no filter bytes
+    * are read. */
   private def trackedBloomCols(spark: SparkSession, root: String,
                                files: Seq[String]): Seq[String] = {
     val f = fs(spark, new Path(root))
     files.map(new Path(_)).groupBy(_.getParent).keys
-      .flatMap(dir => FileStats.readBloomSidecar(f, dir).valuesIterator.flatMap(_.keysIterator))
+      .flatMap(dir => FileStats.readBloomColumns(f, dir))
       .toSeq.distinct.sorted
   }
 
@@ -2654,10 +2658,20 @@ object Versioned {
     * columnar files and runs once per commit, and it buys what min/max
     * cannot: point-lookup file skipping on a HIGH-CARDINALITY UNCLUSTERED
     * key, where every file's [min,max] spans the whole domain and range
-    * stats prune nothing. Sized by `spark.graft.bloom.expectedItems`
-    * (default 100k rows/file ≈ 120 KB/file/col at 1% fpp); values are
-    * hashed with xxhash64 — the same hash the probe side evaluates on the
-    * pushed literal. */
+    * stats prune nothing. Sized at 1% fpp for [[BloomHeadroom]] times
+    * the batch's largest file (footer row counts), capped by
+    * `spark.graft.bloom.expectedItems` (default 100k rows/file ≈ 120 KB
+    * per file and column): every pruned lookup loads the blooms of every
+    * batch it could skip, so a 40-row merge batch must not carry the
+    * bitset a 100k-row file needs. Values are hashed with xxhash64 — the
+    * same hash the probe side evaluates on the pushed literal. */
+  /** Items a bloom is sized for per actual row: a file holding 1/64 of
+    * its design load answers a probe falsely with p ≈ 1e-14 (vs 1% at
+    * full load), so a pushed IN list of thousands of candidates — the
+    * streaming re-delivery guard, the ANN re-rank fetch — still prunes
+    * every file that holds none of them. */
+  private val BloomHeadroom = 64L
+
   private def harvestBlooms(spark: SparkSession, batchDir: Path,
                             newPaths: Seq[Path], df: DataFrame,
                             cols: Seq[String]): Unit =
@@ -2685,7 +2699,9 @@ object Versioned {
     require(unsupported.isEmpty,
       s"bloomCols with unsupported types (float/double excluded by design): " +
         unsupported.mkString(", "))
-    val n = spark.conf.get("spark.graft.bloom.expectedItems", "100000").toLong
+    val n = math.max(1L, math.min(
+      spark.conf.get("spark.graft.bloom.expectedItems", "100000").toLong,
+      BloomHeadroom * FileStats.rowCounts(spark.sparkContext.hadoopConfiguration, paths).values.max))
     // optimal bits for 1% fpp: -n ln(p) / ln(2)^2
     val numBits = math.max(64L,
       (-n * math.log(0.01) / (math.log(2) * math.log(2))).toLong)
@@ -2857,7 +2873,7 @@ object Versioned {
     require(vs.nonEmpty, s"no committed versions at $root")
     requireOwnedFiles(spark, root, "buildBlooms")
     val schema = snapshotSchema(spark, root, Some(vs.last))
-      .getOrElse(readWithSchema(spark, None,
+      .getOrElse(readWithSchema(spark, root, None,
         snapshotFiles(spark, root, Some(vs.last))).schema)
     val files = snapshotFiles(spark, root, Some(vs.last)).map(new Path(_))
     files.groupBy(_.getParent).foreach { case (dir, paths) =>

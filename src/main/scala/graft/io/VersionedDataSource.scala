@@ -57,43 +57,6 @@ object VersionedDataSource {
       liveRoot = if (asOf.isEmpty) Some(root) else None,
       dvBlocked = Versioned.dvEntries(spark, root, asOf).nonEmpty)
   }
-
-  /** Load every batch sidecar referenced by `files` (one tiny driver read
-    * per batch dir): (batchDirName, fileName) -> col -> stats, for scan-time
-    * pruning. Keying includes the batch dir so two part files with the same
-    * name in different batches can never borrow each other's min/max (a
-    * wrong borrow could prune a file that holds matching rows). */
-  private[io] def sidecarsFor(spark: SparkSession,
-                              files: Seq[String]): Map[(String, String), Map[String, FileStats.ColStats]] = {
-    import org.apache.hadoop.fs.Path
-    files.map(new Path(_)).groupBy(_.getParent).flatMap { case (dir, _) =>
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      FileStats.readSidecar(fs, dir).map { case (name, st) => (dir.getName, name) -> st }
-    }
-  }
-
-  /** Load every batch BLOOM sidecar referenced by `files`, keyed like
-    * [[sidecarsFor]]: (batchDirName, fileName) -> col -> serialized bloom.
-    * Only consulted for equality/IN predicates on bloom-tracked columns. */
-  private[io] def bloomsFor(spark: SparkSession,
-                            files: Seq[String]): Map[(String, String), Map[String, Array[Byte]]] = {
-    import org.apache.hadoop.fs.Path
-    files.map(new Path(_)).groupBy(_.getParent).flatMap { case (dir, _) =>
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      FileStats.readBloomSidecar(fs, dir).map { case (name, b) => (dir.getName, name) -> b }
-    }
-  }
-
-  /** Bloom-tracked column NAMES across the snapshot's batches — the
-    * metadata-cheap planning twin of [[bloomsFor]] (header reads only,
-    * no filter bytes), backing `filterAttributes`. */
-  private[io] def bloomColsFor(spark: SparkSession, files: Seq[String]): Set[String] = {
-    import org.apache.hadoop.fs.Path
-    files.map(new Path(_)).groupBy(_.getParent).keysIterator.flatMap { dir =>
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      FileStats.readBloomColumns(fs, dir)
-    }.toSet
-  }
 }
 
 class VersionedDataSource extends TableProvider with DataSourceRegister {
@@ -285,20 +248,11 @@ private[graft] class VersionedReadTable(inner: ParquetTable,
     ()
   }
 
-  // built once per table: the snapshot's files + their sidecar stats +
-  // (lazily read) bloom sidecars for point-lookup skipping
-  private[graft] lazy val prunedIndex: StatsPrunedFileIndex = indexOverride.getOrElse {
-    val spark = inner.sparkSession
-    val files = inner.paths.map(new org.apache.hadoop.fs.Path(_))
-    new StatsPrunedFileIndex(spark, files,
-      VersionedDataSource.sidecarsFor(spark, inner.paths),
-      blooms = () => VersionedDataSource.bloomsFor(spark, inner.paths),
-      bloomCols = () => VersionedDataSource.bloomColsFor(spark, inner.paths),
-      // an explicit cache client, so per-call keep-set derivations
-      // (withKeep) re-list through hits instead of a job per search
-      statusCache = org.apache.spark.sql.execution.datasources
-        .FileStatusCache.getOrCreate(spark))
-  }
+  // built once per table: the snapshot's files + their (lazily read)
+  // stats and bloom sidecars — the same index the library reads plan
+  // through
+  private[graft] lazy val prunedIndex: StatsPrunedFileIndex = indexOverride.getOrElse(
+    StatsPrunedFileIndex.forFiles(inner.sparkSession, inner.paths))
 
   /** A derived read-only view of the same snapshot whose scans keep ONLY
     * `keep`'s files — the prepared handle's per-call pruning surface: the

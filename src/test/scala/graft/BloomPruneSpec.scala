@@ -23,21 +23,6 @@ class BloomPruneSpec extends SparkSpecBase {
     d.getAbsolutePath
   }
 
-  /** Four single-file commits whose id sets INTERLEAVE (id % 4 == batch):
-    * every file's [min,max] covers ~the whole domain, so min/max stats
-    * cannot prune a point lookup — only the bloom can. */
-  private def interleavedTable(bloom: Boolean): String = {
-    val root = tmpRoot()
-    (0 until 4).foreach { m =>
-      Versioned.commit(spark,
-        (0L until 400L).filter(_ % 4 == m).map(i => (i, s"v$i")).toDF("id", "v")
-          .coalesce(1),
-        root, statsCols = Seq("id"),
-        bloomCols = if (bloom) Seq("id") else Nil)
-    }
-    root
-  }
-
   private def keptFiles(df: org.apache.spark.sql.DataFrame): Int = {
     df.collect()
     df.queryExecution.analyzed.collect {

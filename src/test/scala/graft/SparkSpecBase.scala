@@ -26,4 +26,22 @@ abstract class SparkSpecBase extends AnyFunSuite {
     new String(java.nio.file.Files.readAllBytes(p)).split("\n").toSeq
       .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
   }
+
+  /** Four single-file commits whose id sets INTERLEAVE (id % 4 == batch):
+    * every file's [min,max] covers ~the whole domain, so min/max stats
+    * cannot prune a point lookup — only the bloom can. */
+  protected def interleavedTable(bloom: Boolean): String = {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft_bloom").toFile
+    d.deleteOnExit()
+    val root = d.getAbsolutePath
+    (0 until 4).foreach { m =>
+      graft.io.Versioned.commit(spark,
+        (0L until 400L).filter(_ % 4 == m).map(i => (i, s"v$i")).toDF("id", "v")
+          .coalesce(1),
+        root, statsCols = Seq("id"),
+        bloomCols = if (bloom) Seq("id") else Nil)
+    }
+    root
+  }
 }

@@ -72,7 +72,7 @@ class BloomLazinessSpec extends graft.SparkSpecBase {
     val dir = tmpDir()
     val fs = hadoopFs(dir)
     fs.create(new Path(dir, "f.parquet"), true).close()
-    val idx = new StatsPrunedFileIndex(spark, Seq(new Path(dir, "f.parquet")), Map.empty,
+    val idx = new StatsPrunedFileIndex(spark, Seq(new Path(dir, "f.parquet")), () => Map.empty,
       blooms = () => { bloomLoads += 1; Map.empty },
       bloomCols = () => { nameLoads += 1; Set("id") })
     // filterAttributes path: names only, no sidecar deserialization
