@@ -103,36 +103,10 @@ private[graft] class StatsPrunedFileIndex(
     statsColumns ++ bloomCols()
 
   /** Files (as (batchDirName, fileName) keys) that could contain at least
-    * one value of every per-column candidate set (conservative: missing
-    * stats keep the file). Bloom sidecars are consulted too: a runtime
-    * (join-driven) candidate set over an UNCLUSTERED key — where every
-    * file's [min,max] spans the domain — still prunes to the files whose
-    * bloom can contain one of the build side's keys. A column set where
-    * ANY value fails to hash keeps every file for that column
-    * (pruning on the hashable subset alone could drop a file holding
-    * only the unhashable value). */
-  private[io] def runtimeSurvivors(sets: Seq[(String, Seq[Any])]): Set[(String, String)] = {
-    val hashSets: Map[String, Seq[Long]] = sets.flatMap { case (c, vs) =>
-      val hs = vs.map(StatsPrunedFileIndex.externalHash)
-      if (vs.nonEmpty && hs.forall(_.isDefined)) Some(c -> hs.flatten) else None
-    }.toMap
-    files.iterator.map(p => (p.getParent.getName, p.getName)).filter { key =>
-      val byCol = sidecarMap.getOrElse(key, Map.empty)
-      sets.forall { case (c, vs) =>
-        // decode this file's [min,max] once, then probe the whole
-        // candidate set — a join-driven set can carry thousands of keys
-        vs.exists(FileStats.containsProbe(byCol.get(c)))
-      } && {
-        lazy val fileBlooms = bloomMap.getOrElse(key, Map.empty)
-        hashSets.forall { case (c, hs) =>
-          fileBlooms.get(c) match {
-            case None => true
-            case Some(b) => hs.exists(b.mightContainLong)
-          }
-        }
-      }
-    }.toSet
-  }
+    * one value of every per-column candidate set — see
+    * [[StatsPrunedFileIndex.survivors]]. */
+  private[io] def runtimeSurvivors(sets: Seq[(String, Seq[Any])]): Set[(String, String)] =
+    StatsPrunedFileIndex.survivors(files, sidecarMap, bloomMap, sets)
 
   /** A derived index with a runtime keep-set baked in. The parent index is
     * shared by every scan of the table, so runtime filters must NOT mutate
@@ -217,31 +191,87 @@ private[graft] object StatsPrunedFileIndex {
   def forFiles(spark: SparkSession, files: Seq[String],
                deadCols: () => Set[String] = () => Set.empty): StatsPrunedFileIndex = {
     val paths = files.map(new Path(_))
-    val dirs = paths.map(_.getParent).distinct
     val hconf = spark.sparkContext.hadoopConfiguration
-    // per-dir filesystem: a shallow clone's entries may live on another
-    // filesystem than the table root
-    def perDir[V](read: (org.apache.hadoop.fs.FileSystem, Path) => Map[String, Map[String, V]])
-        : Map[(String, String), Map[String, V]] = {
-      lazy val dead = deadCols()
-      dirs.iterator.flatMap { dir =>
-        read(dir.getFileSystem(hconf), dir).iterator.map { case (name, byCol) =>
-          (dir.getName, name) -> byCol.filter { case (c, _) => !dead.contains(c.toLowerCase) }
-        }
-      }.toMap
-    }
     new StatsPrunedFileIndex(spark, paths,
-      sidecars = () => perDir(FileStats.readSidecar),
-      blooms = () => perDir(FileStats.bloomFilters),
+      sidecars = () => perDir(spark, paths, deadCols, FileStats.readSidecar),
+      blooms = () => perDir(spark, paths, deadCols, FileStats.bloomFilters),
       bloomCols = () => {
         val dead = deadCols()
-        dirs.iterator.flatMap(dir => FileStats.readBloomColumns(dir.getFileSystem(hconf), dir))
+        paths.map(_.getParent).distinct.iterator
+          .flatMap(dir => FileStats.readBloomColumns(dir.getFileSystem(hconf), dir))
           .filterNot(c => dead.contains(c.toLowerCase)).toSet
       },
       // an explicit cache client, so per-call keep-set derivations
       // (VersionedReadTable.withKeep) re-list through hits instead of a
       // job per search
       statusCache = FileStatusCache.getOrCreate(spark))
+  }
+
+  /** One sidecar kind for `paths`, read per batch dir (per-dir
+    * filesystem: a shallow clone's entries may live on another
+    * filesystem than the table root) and keyed (batchDirName, fileName),
+    * minus the `deadCols` names. */
+  private def perDir[V](spark: SparkSession, paths: Seq[Path], deadCols: () => Set[String],
+                        read: (org.apache.hadoop.fs.FileSystem, Path) => Map[String, Map[String, V]])
+      : Map[(String, String), Map[String, V]] = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    lazy val dead = deadCols()
+    paths.map(_.getParent).distinct.iterator.flatMap { dir =>
+      read(dir.getFileSystem(hconf), dir).iterator.map { case (name, byCol) =>
+        (dir.getName, name) -> byCol.filter { case (c, _) => !dead.contains(c.toLowerCase) }
+      }
+    }.toMap
+  }
+
+  /** The subset of `files` (absolute paths) that could contain at least
+    * one value of every per-column candidate set ([[survivors]] over the
+    * sidecars [[forFiles]] would load), without building an index, whose
+    * file listing a caller that only needs the keep-set would pay for
+    * nothing. The MERGE probe's pruning over a pinned source's keys. */
+  def survivingFiles(spark: SparkSession, files: Seq[String], deadCols: () => Set[String],
+                     sets: Seq[(String, Seq[Any])]): Seq[String] = {
+    val paths = files.map(new Path(_))
+    val keep = survivors(paths, perDir(spark, paths, deadCols, FileStats.readSidecar),
+      perDir(spark, paths, deadCols, FileStats.bloomFilters), sets)
+    files.zip(paths).collect {
+      case (f, p) if keep((p.getParent.getName, p.getName)) => f
+    }
+  }
+
+  /** Files (as (batchDirName, fileName) keys) that could contain at least
+    * one value of every per-column candidate set (conservative: missing
+    * stats keep the file). Bloom sidecars are consulted too: a runtime
+    * (join-driven) candidate set over an UNCLUSTERED key — where every
+    * file's [min,max] spans the domain — still prunes to the files whose
+    * bloom can contain one of the build side's keys. A column set where
+    * ANY value fails to hash keeps every file for that column
+    * (pruning on the hashable subset alone could drop a file holding
+    * only the unhashable value). Blooms load only when a set hashes. */
+  private def survivors(files: Seq[Path],
+                        sidecarMap: Map[(String, String), Map[String, FileStats.ColStats]],
+                        bloomMap: => Map[(String, String), Map[String, org.apache.spark.util.sketch.BloomFilter]],
+                        sets: Seq[(String, Seq[Any])]): Set[(String, String)] = {
+    val hashSets: Map[String, Seq[Long]] = sets.flatMap { case (c, vs) =>
+      val hs = vs.map(externalHash)
+      if (vs.nonEmpty && hs.forall(_.isDefined)) Some(c -> hs.flatten) else None
+    }.toMap
+    lazy val blooms = bloomMap
+    files.iterator.map(p => (p.getParent.getName, p.getName)).filter { key =>
+      val byCol = sidecarMap.getOrElse(key, Map.empty)
+      sets.forall { case (c, vs) =>
+        // decode this file's [min,max] once, then probe the whole
+        // candidate set — a join-driven set can carry thousands of keys
+        vs.exists(FileStats.containsProbe(byCol.get(c)))
+      } && {
+        lazy val fileBlooms = blooms.getOrElse(key, Map.empty)
+        hashSets.forall { case (c, hs) =>
+          fileBlooms.get(c) match {
+            case None => true
+            case Some(b) => hs.exists(b.mightContainLong)
+          }
+        }
+      }
+    }.toSet
   }
 
   /** Per-column [lo, hi] bounds implied by the pushed conjuncts; columns

@@ -1345,7 +1345,8 @@ object Versioned {
     * matched). */
   def updateWhereDv(spark: SparkSession, root: String,
                     predicate: org.apache.spark.sql.Column,
-                    assignments: Map[String, org.apache.spark.sql.Column]): Long = {
+                    assignments: Map[String, org.apache.spark.sql.Column]): Long =
+      graft.JobDesc(spark, s"versioned updateWhereDv: $root") {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(assignments.nonEmpty, "updateWhereDv needs at least one assignment")
     val vs = versions(spark, root)
@@ -1417,10 +1418,12 @@ object Versioned {
     * in one atomic commit with NO existing file rewritten. The
     * [[mergeInto]] semantics (duplicate source keys rejected, null keys
     * never match and insert, absent table bootstraps, newest-tag replay
-    * guard) and its probe pruning (single stats-tracked key range) carry
-    * over; what changes is the write shape: a daily 1,000-row upsert
-    * into a 100 TB table appends one small batch plus tiny vectors
-    * instead of rewriting every touched file. Source columns must match
+    * guard) and its source handling ([[mergeSource]]: a small source is
+    * pinned on the driver, its key values prune the probe through stats
+    * and blooms, and its batch lands as one file) carry over; what
+    * changes is the write shape: a daily 1,000-row upsert into a 100 TB
+    * table appends one small batch plus tiny vectors instead of
+    * rewriting every touched file. Source columns must match
     * the table exactly (no schema evolution on this path — evolve with
     * an append commit or the copy-on-write merge first). */
   def mergeIntoDv(spark: SparkSession, root: String, source: DataFrame,
@@ -1467,53 +1470,23 @@ object Versioned {
           s"vs source ${source.schema(c).dataType.simpleString} (cast the source)")
     }
     val f = fs(spark, new Path(root))
-    // pin the source: the probe and the batch write must see ONE
-    // evaluation (same rationale as mergeInto)
-    val aligned = source.select(snapshotCols.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the probe and the batch write must see ONE evaluation of the
+    // source (same rationale as mergeInto)
+    val src = mergeSource(spark, root, source.select(snapshotCols.map(col): _*), keys, files,
+      trackedStatsCols(spark, root, files))
     try {
-      // ONE aggregation serves the dup check, the emptiness check and
-      // the probe bounds — see [[sourceKeyProbe]] (previously three
-      // separate actions per merge); the dup check reports after the
-      // shape requires, as in [[mergeInto]]
-      val (dupMax, totalRows, minKey, maxKey) = sourceKeyProbe(aligned, keys)
-      require(dupMax <= 1L, dupKeyMsg(keys))
-      if (totalRows == 0L) return current
-      val srcKeys = aligned.select(keys.map(col): _*).distinct()
-      // probe pruning: identical shape to mergeInto's (single
-      // stats-tracked non-float key -> range-pruned probe set)
-      val statsCols = trackedStatsCols(spark, root, files)
-      // keyType comes from tableSchema (recorded OR inferred), never the
-      // Option-al recorded #schema alone: a pre-schema-tracking table with
-      // a float/double key and tracked stats would otherwise silently
-      // range-prune the probe, and the stats total order distinguishes
-      // -0.0/0.0 and NaN where join equality does not — a matched file
-      // could be missed, leaving duplicate keys after the merge. Mirrors
-      // the copy-on-write mergeInto's snapshot-schema-based guard.
-      val keyType = tableSchema(keys.head).dataType
-      val floatKey = keys.size == 1 &&
-        (keyType == org.apache.spark.sql.types.DoubleType ||
-          keyType == org.apache.spark.sql.types.FloatType)
-      val probeFiles: Seq[String] =
-        if (keys.size != 1 || floatKey || !statsCols.contains(keys.head)) files
-        else minKey match {
-          case None => Seq.empty
-          case Some(mn) => prunedByStats(f, files, keys.head, Some(mn), maxKey)
-        }
+      if (src.isEmpty) return current
       val batchDir = new Path(dataDir(root), s"b$next")
       requireBatchDirFree(f, batchDir, next)
       // staging + rename: same two-writer interleaving defense as commit()
       val staging = stagingDir(root, next)
       f.mkdirs(staging)
       val written =
-        if (probeFiles.isEmpty) Seq.empty[(String, String, Long)]
-        else {
-          val doomed = liveWithKeys(spark, root, schema, probeFiles, dvNow)
-            .join(srcKeys, keys, "left_semi")
-          writeVectors(spark, root, staging, doomed,
-            oldDvBySfx(root, dvNow, probeFiles), "DV merge")
-        }
-      appendDvBatch(spark, root, staging, aligned, schema, current, files, next)
+        if (src.probeFiles.isEmpty) Seq.empty[(String, String, Long)]
+        else writeVectors(spark, root, staging,
+          src.matched(liveWithKeys(spark, root, schema, src.probeFiles, dvNow)),
+          oldDvBySfx(root, dvNow, src.probeFiles), "DV merge")
+      appendDvBatch(spark, root, staging, src.df, schema, current, files, next, src.pinned)
         .fold(abortT => { f.delete(staging, true); throw abortT },
           newFiles => {
             placeBatchDir(f, staging, batchDir, next)
@@ -1521,10 +1494,7 @@ object Versioned {
               files, dvNow, written, allMatch = Seq.empty, newFiles, tag,
               op = "dv_merge")
           })
-    } finally {
-      aligned.unpersist(blocking = false)
-      ()
-    }
+    } finally src.release()
   }
 
   /** Per-file sidecar stats of a snapshot, empty maps where absent — the
@@ -1560,13 +1530,19 @@ object Versioned {
     * merge source) as parquet files into the SAME batch dir that holds
     * the fresh vectors, validate CHECK constraints against the written
     * files, and re-harvest the table's tracked stats/bloom sidecars.
+    * `pinned`: the batch's rows when they are already on the driver (a
+    * pinned merge source, see [[mergeSource]]) — a batch written as one
+    * file then gets its blooms built from those rows ([[driverBlooms]])
+    * instead of a harvest pass over the written file.
     * Returns Left(cause) when validation fails (caller deletes the batch
     * dir and rethrows — nothing published), Right(relative entries)
     * otherwise. */
   private def appendDvBatch(spark: SparkSession, root: String, batchDir: Path,
                             batch: DataFrame, schema: Option[StructType],
                             current: Long, files: Seq[String],
-                            next: Long): Either[Throwable, Seq[String]] = {
+                            next: Long,
+                            pinned: Option[IndexedSeq[org.apache.spark.sql.catalyst.InternalRow]] = None)
+      : Either[Throwable, Seq[String]] = {
     val f = fs(spark, batchDir)
     // the dir already exists (vectors landed first): write the parquet
     // files via a staging subdir + move, keeping ErrorIfExists semantics
@@ -1606,10 +1582,14 @@ object Versioned {
       if (statsCols.nonEmpty && newPaths.nonEmpty)
         FileStats.writeSidecar(f, batchDir,
           FileStats.collect(spark.sparkContext.hadoopConfiguration, newPaths, statsCols))
-      harvestBlooms(spark, batchDir, newPaths, batch,
-        trackedBloomCols(spark, root, files).filter(c =>
-          batch.columns.contains(c) &&
-            FileStats.bloomSupported(batch.schema(c).dataType)))
+      val bloomCols = trackedBloomCols(spark, root, files).filter(c =>
+        batch.columns.contains(c) && FileStats.bloomSupported(batch.schema(c).dataType))
+      (pinned, newPaths) match {
+        case (Some(rows), Seq(one)) if bloomCols.nonEmpty =>
+          mergeBloomSidecar(f, batchDir,
+            Map(one.getName -> driverBlooms(spark, rows, batch.schema, bloomCols)))
+        case _ => harvestBlooms(spark, batchDir, newPaths, batch, bloomCols)
+      }
       // entries name the PUBLISHED dir (b<next>), not the staging dir the
       // files currently sit in — the caller's rename makes them true
       Right(newPaths.map(p => s"data/b$next/${p.getName}"))
@@ -1798,6 +1778,7 @@ object Versioned {
     * file skipping survives the rewrite. */
   def deleteWhere(spark: SparkSession, root: String,
                   predicate: org.apache.spark.sql.Column): Long =
+      graft.JobDesc(spark, s"versioned deleteWhere: $root") {
     rewriteTouched(spark, root, predicate,
       rewrite = df => {
         import org.apache.spark.sql.functions.{coalesce, lit, not}
@@ -1806,6 +1787,7 @@ object Versioned {
       // a file whose stats PROVE every row matches needs no rewrite at
       // all — dropping it from the manifest IS the delete (zero I/O)
       dropAllMatch = true, op = "delete")
+  }
 
   /** Copy-on-write row-level UPDATE: same touched-file machinery as
     * [[deleteWhere]], but matching rows get `assignments` applied (each
@@ -1813,7 +1795,8 @@ object Versioned {
     * non-matching rows in touched files are rewritten unchanged. */
   def updateWhere(spark: SparkSession, root: String,
                   predicate: org.apache.spark.sql.Column,
-                  assignments: Map[String, org.apache.spark.sql.Column]): Long = {
+                  assignments: Map[String, org.apache.spark.sql.Column]): Long =
+      graft.JobDesc(spark, s"versioned updateWhere: $root") {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(assignments.nonEmpty, "updateWhere needs at least one assignment")
     rewriteTouched(spark, root, predicate,
@@ -1844,8 +1827,9 @@ object Versioned {
     * appended, and — the scale point — only the target files that actually
     * CONTAIN a matched key are rewritten; every other file is carried into
     * the new manifest by reference. On a 100 TB table a merge touching one
-    * day rewrites that day's files, and the key probe is one semi-join of
-    * the table against the (small, broadcastable) source key set.
+    * day rewrites that day's files, and the key probe is one scan of the
+    * files that can hold a source key, filtered by the source key set
+    * (see [[mergeSource]]).
     *
     * Semantics match SQL MERGE: duplicate keys in the source are rejected
     * loudly (the "cannot update the same target row twice" rule); source
@@ -1923,81 +1907,53 @@ object Versioned {
             s"vs source ${st.simpleString}")
       }
     }
-    // pin the source: the probe, emptiness check, and final write must all
-    // see ONE evaluation — an expensive or non-deterministic upstream
-    // re-executed per job could otherwise write keys the probe never saw
-    // (leaving their old target rows un-rewritten)
-    // every evolved column is present in the source by construction (old
-    // columns via the `absent` require, new ones BY definition come from
-    // the source); the cast is the identity off the evolution path
-    val aligned = source.select(cols.map(c =>
-        col(c).cast(snapshot.schema(c).dataType).as(c)): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val statsCols = trackedStatsCols(spark, root, files)
+      .filter(c => schema.forall(_.fieldNames.contains(c)))
+    // the source is evaluated ONCE (see [[mergeSource]]): the probe,
+    // emptiness check, and final write must all see one evaluation — an
+    // expensive or non-deterministic upstream re-executed per job could
+    // otherwise write keys the probe never saw (leaving their old target
+    // rows un-rewritten). Every evolved column is present in the source
+    // by construction (old columns via the `absent` require, new ones BY
+    // definition come from the source); the cast is the identity off the
+    // evolution path. The dup check runs after the schema requires: a
+    // source both mis-shaped and dup-keyed reports the shape first.
+    val src = mergeSource(spark, root,
+      source.select(cols.map(c => col(c).cast(snapshot.schema(c).dataType).as(c)): _*),
+      keys, files, statsCols)
     try {
-      // ONE aggregation serves the dup check, the emptiness check and
-      // the probe bounds (previously three separate actions), and warms
-      // the pin — see [[sourceKeyProbe]]. The dup check moved after the
-      // schema requires (it needs the aligned frame): a source that is
-      // both mis-shaped and dup-keyed now reports the shape first.
-      val (dupMax, totalRows, minKey, maxKey) = sourceKeyProbe(aligned, keys)
-      require(dupMax <= 1L, dupKeyMsg(keys))
-      val srcKeys = aligned.select(keys.map(col): _*).distinct()
-      val statsCols = trackedStatsCols(spark, root, files)
-        .filter(c => schema.forall(_.fieldNames.contains(c)))
-      // Probe pruning: with sidecar stats on a single key column, a file
-      // whose [min,max] cannot overlap the source key range cannot contain
-      // a match — so the touched-file probe scans only the overlapping
-      // files instead of the table (a today's-keys merge against a
-      // key-clustered 100 TB table probes ~today's files). Conservative:
-      // stats-less files stay, multi-column keys probe everything, and
-      // floating-point keys are excluded — Spark's join equality
-      // normalizes -0.0 == 0.0 and NaN == NaN while the stats total order
-      // distinguishes them, so range pruning could miss a matched file.
-      val floatKey = keys.size == 1 &&
-        (snapshot.schema(keys.head).dataType == org.apache.spark.sql.types.DoubleType ||
-          snapshot.schema(keys.head).dataType == org.apache.spark.sql.types.FloatType)
-      val probeFiles: Seq[String] =
-        if (keys.size != 1 || floatKey || !statsCols.contains(keys.head)) files
-        else minKey match {
-          case None => Seq.empty // every source key is null: no match possible
-          case Some(mn) => prunedByStats(fs(spark, new Path(root)), files,
-            keys.head, Some(mn), maxKey)
-        }
       // one scan finds the files holding matched keys; the file name must be
       // captured BELOW the join — input_file_name() above a join returns ""
-      // whenever the planner breaks file context (shuffle join)
+      // whenever the planner breaks file context (shuffle join). A join
+      // spreads each file's rows over its partitions: dedup those first.
       val touchedUris =
-        if (probeFiles.isEmpty) Set.empty[String]
-        else collectTouched(spark, readWithSchema(spark, root, schema, probeFiles)
-          .withColumn("__file", input_file_name())
-          .join(srcKeys, keys, "left_semi")
-          .select(col("__file")).distinct(), "MERGE")
+        if (src.probeFiles.isEmpty) Set.empty[String]
+        else {
+          val hits = src.matched(readWithSchema(spark, root, schema, src.probeFiles)
+            .withColumn("__file", input_file_name())).select(col("__file"))
+          collectTouched(spark, if (src.pinned.isDefined) hits else hits.distinct(), "MERGE")
+        }
       if (touchedUris.isEmpty) {
         // pure insert (or empty source): no file rewritten, plain append —
         // which must still re-harvest tracked blooms, or merge-appended
-        // batches silently lose point-lookup pruning. Emptiness comes
-        // from the fused probe — no extra action.
-        if (totalRows == 0L) return current
-        return commit(spark, aligned, root, tag = tag, statsCols = statsCols,
+        // batches silently lose point-lookup pruning
+        if (src.isEmpty) return current
+        return commit(spark, src.df, root, tag = tag, statsCols = statsCols,
           bloomCols = trackedBloomCols(spark, root, files)
-            .filter(c => aligned.columns.contains(c) &&
-              FileStats.bloomSupported(aligned.schema(c).dataType)))
+            .filter(c => src.df.columns.contains(c) &&
+              FileStats.bloomSupported(src.df.schema(c).dataType)))
       }
       val (touched, untouched) = files.partition(f =>
         touchedUris.contains(new Path(f).toUri.getPath))
       // vector-applied: a key matching only a merge-on-read-deleted row is
       // an INSERT (the probe may conservatively touch such files; their
       // rewrite here keeps only live rows)
-      val survivors = readFilesDv(spark, root, schema, touched,
-          dvEntries(spark, root, Some(current)))
-        .join(srcKeys, keys, "left_anti")
-      commitMixed(spark, survivors.unionByName(aligned), root,
+      val survivors = src.unmatched(readFilesDv(spark, root, schema, touched,
+        dvEntries(spark, root, Some(current))))
+      commitMixed(spark, survivors.unionByName(src.df), root,
         untouched.map(relativize(spark, root, _)), statsCols = statsCols, tag = tag,
         bloomCols = trackedBloomCols(spark, root, files), op = "merge")
-    } finally {
-      aligned.unpersist(blocking = false)
-      ()
-    }
+    } finally src.release()
   }
 
   /** Clause ADT for [[mergeIntoConditional]] — the general SQL MERGE
@@ -2061,7 +2017,8 @@ object Versioned {
   def mergeIntoConditional(spark: SparkSession, root: String, source: DataFrame,
                            keys: Seq[String],
                            clauses: Seq[MergeClause],
-                           tag: Option[String] = None): Long = {
+                           tag: Option[String] = None): Long =
+      graft.JobDesc(spark, s"versioned mergeIntoConditional: $root") {
     import org.apache.spark.sql.functions.{coalesce, col, count, input_file_name, lit, when}
     require(keys.nonEmpty, "mergeIntoConditional needs at least one key column")
     require(clauses.nonEmpty, "mergeIntoConditional needs at least one clause")
@@ -2480,6 +2437,92 @@ object Versioned {
     d.withColumn("_change_type", label).drop("_change")
   }
 
+  /** A keyed MERGE source evaluated exactly once, with what both probes
+    * need from it: the files that can hold a matched key (`probeFiles`)
+    * and the target-row filters `matched` (a left-semi join against the
+    * source keys) and `unmatched` (left-anti). `df` is the source to
+    * write; `release` frees it. */
+  private final class MergeSource(val df: DataFrame,
+                                  val pinned: Option[IndexedSeq[org.apache.spark.sql.catalyst.InternalRow]],
+                                  val isEmpty: Boolean,
+                                  val probeFiles: Seq[String],
+                                  val matched: DataFrame => DataFrame,
+                                  val unmatched: DataFrame => DataFrame,
+                                  persisted: Boolean) {
+    def release(): Unit = if (persisted) { df.unpersist(blocking = false); () }
+  }
+
+  /** Evaluate a merge's `aligned` source once and rule out duplicate
+    * fully-keyed rows ([[dupKeyMsg]]). A source whose plan size estimate
+    * is within `spark.sql.autoBroadcastJoinThreshold` — the rule that
+    * already made its key set a broadcast join's build side — and whose
+    * key types compare exactly ([[KeyIn.supports]]) is PINNED: collected
+    * to the driver once and written back from those rows as one file.
+    * Its dup check, emptiness and key set come from the rows; the probe
+    * keeps only the files whose stats and blooms can hold one of its
+    * values on every key column ([[StatsPrunedFileIndex.survivingFiles]]),
+    * and keys match through a broadcast [[KeyIn]] row filter — no
+    * build-side job. Any other source is persisted, probed by
+    * [[sourceKeyProbe]] (single stats-tracked non-float key: range-pruned
+    * probe) and matched by semi/anti joins against its key columns; the
+    * joins ignore build-side multiplicity, so the key set needs no
+    * distinct. `aligned` must carry the table's column types (recorded or
+    * footer-inferred; the callers cast or require them): exact key
+    * matching and the float guard both read the key types from it. */
+  private def mergeSource(spark: SparkSession, root: String, aligned: DataFrame,
+                          keys: Seq[String], files: Seq[String],
+                          statsCols: => Seq[String]): MergeSource = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftx.Bridge
+    import org.apache.spark.sql.types.{DoubleType, FloatType}
+    val keyTypes = keys.map(aligned.schema(_).dataType)
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (keyTypes.forall(KeyIn.supports) && limit >= 0 &&
+        aligned.queryExecution.optimizedPlan.stats.sizeInBytes <= limit) {
+      val rows = Bridge.collectInternal(aligned)
+      // a row with ANY null key component never matches (SQL join
+      // semantics): only fully-keyed rows collide or probe
+      val keyed = KeyIn.keysOf(rows, keys.map(aligned.schema.fieldIndex), keyTypes)
+      require(keyed.distinct.size == keyed.size, dupKeyMsg(keys))
+      // per key column, the values in the stats' domain; a column with a
+      // value stats cannot compare prunes nothing
+      val probeFiles =
+        if (keyed.isEmpty || files.isEmpty) Seq.empty
+        else StatsPrunedFileIndex.survivingFiles(spark, files, () => statsDeadColumns(spark, root),
+          keys.indices.flatMap { i =>
+            val t = keyTypes(i)
+            val vs = keyed.map(k => StatsPrunedFileIndex.internalValue(t, k.get(i, t)))
+            if (vs.forall(_.isDefined)) Some(keys(i) -> vs.flatten.distinct) else None
+          })
+      lazy val member = KeyIn.column(spark.sparkContext, keys.map(col), keyed)
+      new MergeSource(Bridge.localFrame(spark, aligned.schema, rows).coalesce(1), Some(rows),
+        rows.isEmpty, probeFiles, _.filter(member), _.filter(!member), persisted = false)
+    } else {
+      val persisted = aligned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val (dupMax, totalRows, minKey, maxKey) = sourceKeyProbe(persisted, keys)
+        require(dupMax <= 1L, dupKeyMsg(keys))
+        // range pruning only on a single stats-tracked key, and never on
+        // a float one: join equality normalizes -0.0 == 0.0 and NaN ==
+        // NaN while the stats total order distinguishes them
+        val floatKey = keyTypes.head == DoubleType || keyTypes.head == FloatType
+        val probeFiles =
+          if (keys.size != 1 || floatKey || !statsCols.contains(keys.head)) files
+          else minKey match {
+            case None => Seq.empty // every source key is null: no match possible
+            case Some(mn) => prunedByStats(fs(spark, new Path(root)), files, keys.head,
+              Some(mn), maxKey)
+          }
+        val srcKeys = persisted.select(keys.map(col): _*)
+        new MergeSource(persisted, None, totalRows == 0L, probeFiles,
+          _.join(srcKeys, keys, "left_semi"), _.join(srcKeys, keys, "left_anti"),
+          persisted = true)
+      } catch {
+        case t: Throwable => persisted.unpersist(blocking = false); throw t
+      }
+    }
+  }
+
   /** ONE source-probe aggregation serving the three separate actions
     * every merge writer paid per call — the duplicate-fully-keyed-key
     * check, the source emptiness check and the single-key min/max
@@ -2491,7 +2534,7 @@ object Versioned {
     * (null-keyed rows never match a target row, so their multiplicity
     * is legal — SQL join semantics); and min/max of the first key over
     * the groups equal the row-level bounds (min/max skip nulls either
-    * way). Run on the PINNED source, so the probe also warms the
+    * way). Run on the PERSISTED source, so the probe also warms the
     * persist. Returns (dupMax, totalRows, minKey, maxKey); minKey None
     * = every key null (or empty source). */
   private def sourceKeyProbe(pinned: DataFrame, keys: Seq[String])
@@ -2516,26 +2559,29 @@ object Versioned {
     s"source has multiple rows per key (${keys.mkString(", ")}): " +
       "MERGE would update the same target row twice"
 
-  /** Collect the touched-file probe's distinct file URIs to the driver,
-    * capped. The collect carries file NAMES, never row data, so it is
-    * bounded by file count — but a predicate matching most of a
+  /** Collect the touched-file probe's distinct file URIs (`fileUris`: one
+    * string column, either straight off the scan or already distinct) to
+    * the driver, capped. Each task dedups its own rows, so a scan-side
+    * probe is one job with no shuffle, and the collect carries at most
+    * one name per file and scan split, never row data — bounded by file
+    * count. But a predicate matching most of a
     * multi-million-file table would still build a driver set of millions
-    * of paths. Past `spark.graft.maxTouchedFiles` (default 1,000,000 —
+    * of paths: past `spark.graft.maxTouchedFiles` (default 1,000,000 —
     * ~100 MB of paths, the same class of driver-side metadata bound Delta
     * accepts) the operation fails LOUDLY with a rewrite-in-ranges hint
-    * instead of silently stressing the driver; the limit also bounds the
-    * fetch itself. */
+    * instead of silently stressing the driver. */
   private def collectTouched(spark: SparkSession,
                              fileUris: DataFrame, what: String): Set[String] = {
+    import org.apache.spark.sql.Encoders
     val cap = spark.conf.get("spark.graft.maxTouchedFiles", "1000000").toInt
-    // cap + 1 in Long: a cap of Int.MaxValue ("unlimited") must not wrap
-    // the limit negative
-    val rows = fileUris.limit(math.min(cap.toLong + 1, Int.MaxValue.toLong).toInt).collect()
-    require(rows.length <= cap,
+    val uris = fileUris.as(Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING).collect()
+      .iterator.map(u => new Path(java.net.URI.create(u)).toUri.getPath).toSet
+    require(uris.size <= cap,
       s"$what touches more than spark.graft.maxTouchedFiles=$cap files; " +
         "narrow the predicate / source key range, run the rewrite in " +
         "ranges (several commits over disjoint key ranges), or raise the cap")
-    rows.iterator.map(r => new Path(java.net.URI.create(r.getString(0))).toUri.getPath).toSet
+    uris
   }
 
   /** Shared copy-on-write core: find files containing predicate matches,
@@ -2600,7 +2646,7 @@ object Versioned {
       if (undecided.isEmpty) Set.empty[String]
       else collectTouched(spark, readWithSchema(spark, root, schema, undecided)
         .filter(predicate)
-        .select(input_file_name()).distinct(), "row-level rewrite")
+        .select(input_file_name()), "row-level rewrite")
     val (scanTouched, scanCarried) = undecided.partition(p =>
       touchedUris.contains(new Path(p).toUri.getPath))
     val touched = (if (dropAllMatch) Seq.empty else allMatch) ++ scanTouched
@@ -2679,17 +2725,15 @@ object Versioned {
 
   /** Core bloom harvest: build per-file blooms over `cols` for exactly
     * `paths` (read under `schema`'s types — integrals hash AS LONG, see
-    * below) and MERGE them into the batch dir's bloom sidecar (existing
-    * entries for other files/columns survive — a retrofit over the
-    * current snapshot must not erase blooms of files only older versions
-    * reference). */
-  private def harvestBloomsFor(spark: SparkSession, batchDir: Path,
-                               paths: Seq[Path],
-                               schema: StructType,
-                               cols: Seq[String]): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.functions.input_file_name
+    * [[bloomAggregate]]) and MERGE them into the batch dir's bloom
+    * sidecar (existing entries for other files/columns survive — a
+    * retrofit over the current snapshot must not erase blooms of files
+    * only older versions reference). */
+  private[io] def harvestBloomsFor(spark: SparkSession, batchDir: Path,
+                                   paths: Seq[Path],
+                                   schema: StructType,
+                                   cols: Seq[String]): Unit = {
+    import org.apache.spark.sql.functions.{col, input_file_name}
     import org.apache.spark.sql.graftx.Bridge
     if (cols.isEmpty || paths.isEmpty) return
     val names = schema.fieldNames.toSet
@@ -2699,47 +2743,83 @@ object Versioned {
     require(unsupported.isEmpty,
       s"bloomCols with unsupported types (float/double excluded by design): " +
         unsupported.mkString(", "))
-    val n = math.max(1L, math.min(
-      spark.conf.get("spark.graft.bloom.expectedItems", "100000").toLong,
-      BloomHeadroom * FileStats.rowCounts(spark.sparkContext.hadoopConfiguration, paths).values.max))
-    // optimal bits for 1% fpp: -n ln(p) / ln(2)^2
-    val numBits = math.max(64L,
-      (-n * math.log(0.01) / (math.log(2) * math.log(2))).toLong)
-    val batch = spark.read.schema(org.apache.spark.sql.types.StructType(
-        schema.filter(f => cols.contains(f.name))))
+    val (n, numBits) = bloomSizing(spark,
+      FileStats.rowCounts(spark.sparkContext.hadoopConfiguration, paths).values.max)
+    val batch = spark.read.schema(StructType(schema.filter(f => cols.contains(f.name))))
       .parquet(paths.map(_.toString): _*)
       .withColumn("__file", input_file_name())
     val aggs = cols.map { c =>
-      // integral columns hash their value AS LONG (both here and on the
-      // probe side): xxhash64(int) != xxhash64(long) for the same value,
-      // so without the normalization a type-widening evolution
-      // (int -> long) would flip every old bloom into false negatives —
-      // and a false-negative bloom WRONGLY PRUNES files that match
-      val base = org.apache.spark.sql.functions.col(c)
-      val hashed = schema(c).dataType match {
-        case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType =>
-          base.cast(org.apache.spark.sql.types.LongType)
-        case _ => base
-      }
-      Bridge.column(new BloomFilterAggregate(
-        new XxHash64(Seq(Bridge.expression(hashed))),
-        Literal(n), Literal(numBits)).toAggregateExpression()).as(s"__bloom_$c")
+      Bridge.column(bloomAggregate(Bridge.expression(col(c)), schema(c).dataType, n, numBits)
+        .toAggregateExpression()).as(s"__bloom_$c")
     }
-    val rows = batch.groupBy(org.apache.spark.sql.functions.col("__file"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    val f = batchDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fresh = rows.map { r =>
-      val file = new Path(java.net.URI.create(r.getString(0))).getName
-      file -> cols.zipWithIndex.flatMap { case (c, i) =>
-        Option(r.get(i + 1)).map(b => c -> b.asInstanceOf[Array[Byte]])
-      }.toMap
+    val rows = batch.groupBy(col("__file")).agg(aggs.head, aggs.tail: _*).collect()
+    mergeBloomSidecar(batchDir.getFileSystem(spark.sparkContext.hadoopConfiguration), batchDir,
+      rows.map { r =>
+        new Path(java.net.URI.create(r.getString(0))).getName ->
+          cols.zipWithIndex.flatMap { case (c, i) =>
+            Option(r.get(i + 1)).map(b => c -> b.asInstanceOf[Array[Byte]])
+          }.toMap
+      }.toMap)
+  }
+
+  /** The blooms [[harvestBloomsFor]] would build over `cols` for ONE
+    * file holding exactly `rows` (internal rows under `schema`), built on
+    * the driver with the same aggregate, hash and sizing — the same
+    * bytes, without the two-job harvest pass. A column with no entry in
+    * the result gets none from the harvest either. */
+  private[io] def driverBlooms(spark: SparkSession,
+                               rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
+                               schema: StructType, cols: Seq[String]): Map[String, Array[Byte]] = {
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    val (n, numBits) = bloomSizing(spark, rows.size.toLong)
+    cols.flatMap { c =>
+      val dt = schema(c).dataType
+      val agg = bloomAggregate(BoundReference(schema.fieldIndex(c), dt, nullable = true), dt,
+        n, numBits)
+      val buf = agg.createAggregationBuffer()
+      rows.foreach(agg.update(buf, _))
+      Option(agg.eval(buf)).map(b => c -> b.asInstanceOf[Array[Byte]])
     }.toMap
+  }
+
+  /** (items, bits) a batch's blooms are sized for: 1% fpp at
+    * [[BloomHeadroom]] times its largest file's rows, capped by
+    * `spark.graft.bloom.expectedItems`. */
+  private def bloomSizing(spark: SparkSession, maxFileRows: Long): (Long, Long) = {
+    val n = math.max(1L, math.min(
+      spark.conf.get("spark.graft.bloom.expectedItems", "100000").toLong,
+      BloomHeadroom * maxFileRows))
+    // optimal bits for 1% fpp: -n ln(p) / ln(2)^2
+    (n, math.max(64L, (-n * math.log(0.01) / (math.log(2) * math.log(2))).toLong))
+  }
+
+  /** The bloom aggregate over `value` (of type `dt`). Integral columns
+    * hash their value AS LONG (both here and on the probe side):
+    * xxhash64(int) != xxhash64(long) for the same value, so without the
+    * normalization a type-widening evolution (int -> long) would flip
+    * every old bloom into false negatives — and a false-negative bloom
+    * WRONGLY PRUNES files that match. */
+  private def bloomAggregate(value: org.apache.spark.sql.catalyst.expressions.Expression,
+                             dt: DataType, n: Long, numBits: Long)
+      : org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val hashed = dt match {
+      case ByteType | ShortType | IntegerType | LongType => Cast(value, LongType)
+      case _ => value
+    }
+    new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
+      new XxHash64(Seq(hashed)), Literal(n), Literal(numBits))
+  }
+
+  /** Merge `fresh` (file -> column -> bloom bytes) into the batch dir's
+    * bloom sidecar; entries for other files and columns survive. */
+  private def mergeBloomSidecar(f: FileSystem, batchDir: Path,
+                                fresh: Map[String, Map[String, Array[Byte]]]): Unit = {
     val existing = FileStats.readBloomSidecar(f, batchDir)
-    val merged = (existing.keySet ++ fresh.keySet).map { file =>
+    FileStats.writeBloomSidecar(f, batchDir, (existing.keySet ++ fresh.keySet).map { file =>
       file -> (existing.getOrElse(file, Map.empty) ++ fresh.getOrElse(file, Map.empty))
-    }.toMap
-    FileStats.writeBloomSidecar(f, batchDir, merged)
+    }.toMap)
   }
 
   /** Retrofit per-file min/max stats over `cols` onto the CURRENT

@@ -100,6 +100,27 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `df`'s rows in Catalyst's internal encoding, collected as one SQL
+    * execution (the same action `collect()` runs, minus the conversion
+    * to external Rows) — what a plan pinned on the driver needs to serve
+    * its rows again through [[localFrame]] without a round trip through
+    * java.sql types. */
+  def collectInternal(df: org.apache.spark.sql.DataFrame)
+      : IndexedSeq[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan.executeCollect().map(_.copy()).toIndexedSeq
+    }
+  }
+
+  /** DataFrame over rows already on the driver (a LocalRelation). */
+  def localFrame(spark: org.apache.spark.sql.SparkSession,
+                 schema: org.apache.spark.sql.types.StructType,
+                 rows: Seq[org.apache.spark.sql.catalyst.InternalRow])
+      : org.apache.spark.sql.DataFrame =
+    ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
   /** Streaming-marked DataFrame over already-computed rows. The V1
     * streaming Source contract asserts getBatch's result carries
     * isStreaming=true (MicroBatchExecution grafts the plan under the

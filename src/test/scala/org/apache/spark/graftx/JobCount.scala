@@ -8,13 +8,20 @@ import org.apache.spark.sql.SparkSession
   * block has been delivered. */
 object JobCount {
   def apply[A](spark: SparkSession)(body: => A): (A, Int) = {
+    val (out, descs) = labels(spark)(body)
+    (out, descs.size)
+  }
+
+  /** The `spark.job.description` of every job the block runs, in start
+    * order (null for an unlabelled job). */
+  def labels[A](spark: SparkSession)(body: => A): (A, Seq[String]) = {
     val sc = spark.sparkContext
     val tag = java.util.UUID.randomUUID.toString
-    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graftx.jobcount") == tag))
-          n.incrementAndGet()
+        Option(e.properties).filter(_.getProperty("graftx.jobcount") == tag)
+          .foreach(p => seen.add(Option(p.getProperty("spark.job.description"))))
     }
     sc.addSparkListener(listener)
     val prev = sc.getLocalProperty("graftx.jobcount")
@@ -22,7 +29,8 @@ object JobCount {
     try {
       val out = body
       sc.listenerBus.waitUntilEmpty(60000)
-      (out, n.get)
+      import scala.jdk.CollectionConverters._
+      (out, seen.asScala.toSeq.map(_.orNull))
     } finally {
       sc.setLocalProperty("graftx.jobcount", prev)
       sc.removeSparkListener(listener)
