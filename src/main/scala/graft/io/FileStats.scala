@@ -294,11 +294,15 @@ object FileStats {
 
   /** Write the batch's bloom sidecar (TSV: file, col, base64(bloom bytes) —
     * the spark.util.sketch serialized form). A `#cols=` header line lists
-    * the tracked column names so planning ([[readBloomColumns]]) learns
-    * them from one small read instead of streaming every filter's bytes. */
+    * the tracked column names — `tracked` plus every column with an entry
+    * — so planning ([[readBloomColumns]]) learns them from one small read
+    * instead of streaming every filter's bytes. A tracked column may have
+    * no entry for a file (no values in it); readers keep such a file. */
   def writeBloomSidecar(fs: FileSystem, batchDir: Path,
-                        blooms: Map[String, Map[String, Array[Byte]]]): Unit = {
-    val cols = blooms.valuesIterator.flatMap(_.keysIterator).toSeq.distinct.sorted
+                        blooms: Map[String, Map[String, Array[Byte]]],
+                        tracked: Iterable[String] = Nil): Unit = {
+    val cols = (tracked.iterator ++ blooms.valuesIterator.flatMap(_.keysIterator))
+      .toSeq.distinct.sorted
     val header = s"#cols=${cols.mkString(",")}"
     val body = (header +: blooms.toSeq.sortBy(_._1).flatMap { case (file, byCol) =>
       byCol.toSeq.sortBy(_._1).map { case (c, bytes) =>

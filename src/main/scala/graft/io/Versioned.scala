@@ -1418,9 +1418,10 @@ object Versioned {
     * in one atomic commit with NO existing file rewritten. The
     * [[mergeInto]] semantics (duplicate source keys rejected, null keys
     * never match and insert, absent table bootstraps, newest-tag replay
-    * guard) and its source handling ([[mergeSource]]: a small source is
-    * pinned on the driver, its key values prune the probe through stats
-    * and blooms, and its batch lands as one file) carry over; what
+    * guard) and its source handling ([[mergeSource]]: a small source —
+    * by plan estimate, else by measured size — is pinned on the driver,
+    * its key values prune the probe through stats and blooms, and its
+    * batch lands as one file) carry over; what
     * changes is the write shape: a daily 1,000-row upsert into a 100 TB
     * table appends one small batch plus tiny vectors instead of
     * rewriting every touched file. Source columns must match
@@ -1586,7 +1587,7 @@ object Versioned {
         batch.columns.contains(c) && FileStats.bloomSupported(batch.schema(c).dataType))
       (pinned, newPaths) match {
         case (Some(rows), Seq(one)) if bloomCols.nonEmpty =>
-          mergeBloomSidecar(f, batchDir,
+          mergeBloomSidecar(f, batchDir, bloomCols,
             Map(one.getName -> driverBlooms(spark, rows, batch.schema, bloomCols)))
         case _ => harvestBlooms(spark, batchDir, newPaths, batch, bloomCols)
       }
@@ -1829,7 +1830,10 @@ object Versioned {
     * the new manifest by reference. On a 100 TB table a merge touching one
     * day rewrites that day's files, and the key probe is one scan of the
     * files that can hold a source key, filtered by the source key set
-    * (see [[mergeSource]]).
+    * (see [[mergeSource]]: a source whose rows fit the broadcast
+    * threshold — by plan estimate, else by measured size, so a small
+    * join result estimated far above still qualifies — is pinned on the
+    * driver and filtered by key, any other is persisted and joined).
     *
     * Semantics match SQL MERGE: duplicate keys in the source are rejected
     * loudly (the "cannot update the same target row twice" rule); source
@@ -2453,74 +2457,145 @@ object Versioned {
   }
 
   /** Evaluate a merge's `aligned` source once and rule out duplicate
-    * fully-keyed rows ([[dupKeyMsg]]). A source whose plan size estimate
-    * is within `spark.sql.autoBroadcastJoinThreshold` — the rule that
-    * already made its key set a broadcast join's build side — and whose
-    * key types compare exactly ([[KeyIn.supports]]) is PINNED: collected
-    * to the driver once and written back from those rows as one file.
-    * Its dup check, emptiness and key set come from the rows; the probe
-    * keeps only the files whose stats and blooms can hold one of its
-    * values on every key column ([[StatsPrunedFileIndex.survivingFiles]]),
-    * and keys match through a broadcast [[KeyIn]] row filter — no
-    * build-side job. Any other source is persisted, probed by
-    * [[sourceKeyProbe]] (single stats-tracked non-float key: range-pruned
-    * probe) and matched by semi/anti joins against its key columns; the
-    * joins ignore build-side multiplicity, so the key set needs no
-    * distinct. `aligned` must carry the table's column types (recorded or
-    * footer-inferred; the callers cast or require them): exact key
-    * matching and the float guard both read the key types from it. */
+    * fully-keyed rows ([[dupKeyMsg]]). A source whose key types compare
+    * exactly ([[KeyIn.supports]]) and whose rows fit
+    * `spark.sql.autoBroadcastJoinThreshold` — the rule that already made
+    * its key set a broadcast join's build side — is PINNED: collected to
+    * the driver once and written back from those rows as one file. The
+    * pin is decided by the plan's size estimate, else by the measured
+    * size: a source estimated within the threshold is collected directly;
+    * one estimated above (the estimator multiplies sizes across every
+    * join, so a small join result can estimate far above) is persisted
+    * and collected from the cache. Either collect is bounded
+    * ([[Bridge.collectBounded]]): a source measuring above the threshold
+    * is never held whole on the driver and takes the persisted path — its
+    * cache already warm when estimated above; re-evaluated once, into the
+    * cache, when its estimate was too low. A pinned source's dup check,
+    * emptiness and key set come from its rows; the probe keeps only the
+    * files whose stats and blooms can hold one of its values on every key
+    * column ([[StatsPrunedFileIndex.survivingFiles]]), and keys match
+    * through a broadcast [[KeyIn]] row filter — no build-side job. Any
+    * other source is persisted, probed by [[sourceKeyProbe]] (single
+    * stats-tracked non-float key: range-pruned probe) and matched by
+    * semi/anti joins against its key columns; the joins ignore
+    * build-side multiplicity, so the key set needs no distinct. Every
+    * decline but the deliberate negative threshold is logged
+    * ([[declinePin]]). `aligned` must carry the table's column types
+    * (recorded or footer-inferred; the callers cast or require them):
+    * exact key matching and the float guard both read the key types from
+    * it. */
   private def mergeSource(spark: SparkSession, root: String, aligned: DataFrame,
                           keys: Seq[String], files: Seq[String],
                           statsCols: => Seq[String]): MergeSource = {
-    import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.graftx.Bridge
-    import org.apache.spark.sql.types.{DoubleType, FloatType}
+    import org.apache.spark.storage.StorageLevel
     val keyTypes = keys.map(aligned.schema(_).dataType)
     val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
-    if (keyTypes.forall(KeyIn.supports) && limit >= 0 &&
-        aligned.queryExecution.optimizedPlan.stats.sizeInBytes <= limit) {
-      val rows = Bridge.collectInternal(aligned)
-      // a row with ANY null key component never matches (SQL join
-      // semantics): only fully-keyed rows collide or probe
-      val keyed = KeyIn.keysOf(rows, keys.map(aligned.schema.fieldIndex), keyTypes)
-      require(keyed.distinct.size == keyed.size, dupKeyMsg(keys))
-      // per key column, the values in the stats' domain; a column with a
-      // value stats cannot compare prunes nothing
-      val probeFiles =
-        if (keyed.isEmpty || files.isEmpty) Seq.empty
-        else StatsPrunedFileIndex.survivingFiles(spark, files, () => statsDeadColumns(spark, root),
-          keys.indices.flatMap { i =>
-            val t = keyTypes(i)
-            val vs = keyed.map(k => StatsPrunedFileIndex.internalValue(t, k.get(i, t)))
-            if (vs.forall(_.isDefined)) Some(keys(i) -> vs.flatten.distinct) else None
-          })
-      lazy val member = KeyIn.column(spark.sparkContext, keys.map(col), keyed)
-      new MergeSource(Bridge.localFrame(spark, aligned.schema, rows).coalesce(1), Some(rows),
-        rows.isEmpty, probeFiles, _.filter(member), _.filter(!member), persisted = false)
-    } else {
-      val persisted = aligned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def declined(persisted: DataFrame, why: String): MergeSource = {
+      declinePin(root, why)
+      joinedSource(spark, root, persisted, keys, keyTypes, files, statsCols)
+    }
+    def measuredAbove(bytes: Long) = s"measured $bytes bytes > threshold $limit bytes"
+    if (limit < 0)
+      joinedSource(spark, root, aligned.persist(StorageLevel.MEMORY_AND_DISK), keys, keyTypes,
+        files, statsCols)
+    else if (!keyTypes.forall(KeyIn.supports))
+      declined(aligned.persist(StorageLevel.MEMORY_AND_DISK),
+        s"key type(s) ${keyTypes.map(_.simpleString).mkString(", ")} do not all compare exactly")
+    else if (aligned.queryExecution.optimizedPlan.stats.sizeInBytes <= limit)
+      Bridge.collectBounded(aligned, limit) match {
+        case Right(rows) => pinnedSource(spark, root, aligned, rows, keys, keyTypes, files)
+        case Left(bytes) => declined(aligned.persist(StorageLevel.MEMORY_AND_DISK),
+          measuredAbove(bytes))
+      }
+    else {
+      val persisted = aligned.persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        val (dupMax, totalRows, minKey, maxKey) = sourceKeyProbe(persisted, keys)
-        require(dupMax <= 1L, dupKeyMsg(keys))
-        // range pruning only on a single stats-tracked key, and never on
-        // a float one: join equality normalizes -0.0 == 0.0 and NaN ==
-        // NaN while the stats total order distinguishes them
-        val floatKey = keyTypes.head == DoubleType || keyTypes.head == FloatType
-        val probeFiles =
-          if (keys.size != 1 || floatKey || !statsCols.contains(keys.head)) files
-          else minKey match {
-            case None => Seq.empty // every source key is null: no match possible
-            case Some(mn) => prunedByStats(fs(spark, new Path(root)), files, keys.head,
-              Some(mn), maxKey)
-          }
-        val srcKeys = persisted.select(keys.map(col): _*)
-        new MergeSource(persisted, None, totalRows == 0L, probeFiles,
-          _.join(srcKeys, keys, "left_semi"), _.join(srcKeys, keys, "left_anti"),
-          persisted = true)
+        // a fresh frame over the analyzed plan: the cache manager swaps
+        // the persisted relation in (`aligned`'s own optimized plan
+        // predates the persist and would evaluate the upstream again)
+        Bridge.collectBounded(Bridge.ofRows(spark, aligned.queryExecution.analyzed), limit) match {
+          case Right(rows) =>
+            persisted.unpersist(blocking = false)
+            pinnedSource(spark, root, aligned, rows, keys, keyTypes, files)
+          case Left(bytes) => declined(persisted, measuredAbove(bytes))
+        }
       } catch {
         case t: Throwable => persisted.unpersist(blocking = false); throw t
       }
     }
+  }
+
+  /** [[mergeSource]]'s pinned path over the source's collected `rows`. */
+  private def pinnedSource(spark: SparkSession, root: String, aligned: DataFrame,
+                           rows: IndexedSeq[org.apache.spark.sql.catalyst.InternalRow],
+                           keys: Seq[String], keyTypes: Seq[DataType],
+                           files: Seq[String]): MergeSource = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftx.Bridge
+    // a row with ANY null key component never matches (SQL join
+    // semantics): only fully-keyed rows collide or probe
+    val keyed = KeyIn.keysOf(rows, keys.map(aligned.schema.fieldIndex), keyTypes)
+    require(keyed.distinct.size == keyed.size, dupKeyMsg(keys))
+    // per key column, the values in the stats' domain; a column with a
+    // value stats cannot compare prunes nothing
+    val probeFiles =
+      if (keyed.isEmpty || files.isEmpty) Seq.empty
+      else StatsPrunedFileIndex.survivingFiles(spark, files, () => statsDeadColumns(spark, root),
+        keys.indices.flatMap { i =>
+          val t = keyTypes(i)
+          val vs = keyed.map(k => StatsPrunedFileIndex.internalValue(t, k.get(i, t)))
+          if (vs.forall(_.isDefined)) Some(keys(i) -> vs.flatten.distinct) else None
+        })
+    lazy val member = KeyIn.column(spark.sparkContext, keys.map(col), keyed)
+    new MergeSource(Bridge.localFrame(spark, aligned.schema, rows).coalesce(1), Some(rows),
+      rows.isEmpty, probeFiles, _.filter(member), _.filter(!member), persisted = false)
+  }
+
+  /** [[mergeSource]]'s persisted path: the already `persisted` source
+    * (released here on failure) probed once and matched by joins. */
+  private def joinedSource(spark: SparkSession, root: String, persisted: DataFrame,
+                           keys: Seq[String], keyTypes: Seq[DataType], files: Seq[String],
+                           statsCols: => Seq[String]): MergeSource = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{DoubleType, FloatType}
+    try {
+      val (dupMax, totalRows, minKey, maxKey) = sourceKeyProbe(persisted, keys)
+      require(dupMax <= 1L, dupKeyMsg(keys))
+      // range pruning only on a single stats-tracked key, and never on
+      // a float one: join equality normalizes -0.0 == 0.0 and NaN ==
+      // NaN while the stats total order distinguishes them
+      val floatKey = keyTypes.head == DoubleType || keyTypes.head == FloatType
+      val probeFiles =
+        if (keys.size != 1 || floatKey || !statsCols.contains(keys.head)) files
+        else minKey match {
+          case None => Seq.empty // every source key is null: no match possible
+          case Some(mn) => prunedByStats(fs(spark, new Path(root)), files, keys.head,
+            Some(mn), maxKey)
+        }
+      val srcKeys = persisted.select(keys.map(col): _*)
+      // a USING join puts its keys first: keep the target's column order
+      def by(kind: String)(target: DataFrame): DataFrame =
+        target.join(srcKeys, keys, kind).select(target.columns.map(col): _*)
+      new MergeSource(persisted, None, totalRows == 0L, probeFiles,
+        by("left_semi"), by("left_anti"), persisted = true)
+    } catch {
+      case t: Throwable => persisted.unpersist(blocking = false); throw t
+    }
+  }
+
+  private val pinLog = org.slf4j.LoggerFactory.getLogger("graft.io.Versioned")
+
+  /** Most recent MERGE-source pin decline reason — the testable half of
+    * the decline logging (a spec asserts the signal fires; production
+    * reads the WARN). Never set by the deliberate negative threshold. */
+  private[graft] val lastPinDecline =
+    new java.util.concurrent.atomic.AtomicReference[String](null)
+
+  private def declinePin(root: String, reason: String): Unit = {
+    lastPinDecline.set(reason)
+    pinLog.warn(s"MERGE source not pinned on the driver ($reason) — " +
+      s"the persisted join path serves this merge into $root")
   }
 
   /** ONE source-probe aggregation serving the three separate actions
@@ -2754,7 +2829,7 @@ object Versioned {
     }
     val rows = batch.groupBy(col("__file")).agg(aggs.head, aggs.tail: _*).collect()
     mergeBloomSidecar(batchDir.getFileSystem(spark.sparkContext.hadoopConfiguration), batchDir,
-      rows.map { r =>
+      cols, rows.map { r =>
         new Path(java.net.URI.create(r.getString(0))).getName ->
           cols.zipWithIndex.flatMap { case (c, i) =>
             Option(r.get(i + 1)).map(b => c -> b.asInstanceOf[Array[Byte]])
@@ -2798,28 +2873,34 @@ object Versioned {
     * xxhash64(int) != xxhash64(long) for the same value, so without the
     * normalization a type-widening evolution (int -> long) would flip
     * every old bloom into false negatives — and a false-negative bloom
-    * WRONGLY PRUNES files that match. */
+    * WRONGLY PRUNES files that match. A null value is fed as null, which
+    * the aggregate skips (xxhash64 of a null is its seed, which it would
+    * insert): an equality probe never matches a null, and a column with
+    * no values gets no bloom at all. */
   private def bloomAggregate(value: org.apache.spark.sql.catalyst.expressions.Expression,
                              dt: DataType, n: Long, numBits: Long)
       : org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
+    import org.apache.spark.sql.catalyst.expressions.{Cast, If, IsNull, Literal, XxHash64}
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val hashed = dt match {
       case ByteType | ShortType | IntegerType | LongType => Cast(value, LongType)
       case _ => value
     }
     new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-      new XxHash64(Seq(hashed)), Literal(n), Literal(numBits))
+      If(IsNull(value), Literal(null, LongType), new XxHash64(Seq(hashed))),
+      Literal(n), Literal(numBits))
   }
 
-  /** Merge `fresh` (file -> column -> bloom bytes) into the batch dir's
-    * bloom sidecar; entries for other files and columns survive. */
-  private def mergeBloomSidecar(f: FileSystem, batchDir: Path,
+  /** Merge `fresh` (file -> column -> bloom bytes) over `cols` into the
+    * batch dir's bloom sidecar; entries for other files and columns
+    * survive, and every column stays tracked, also one with no entry (a
+    * file with no values in it gets no bloom). */
+  private def mergeBloomSidecar(f: FileSystem, batchDir: Path, cols: Seq[String],
                                 fresh: Map[String, Map[String, Array[Byte]]]): Unit = {
     val existing = FileStats.readBloomSidecar(f, batchDir)
     FileStats.writeBloomSidecar(f, batchDir, (existing.keySet ++ fresh.keySet).map { file =>
       file -> (existing.getOrElse(file, Map.empty) ++ fresh.getOrElse(file, Map.empty))
-    }.toMap)
+    }.toMap, FileStats.readBloomColumns(f, batchDir) ++ cols)
   }
 
   /** Retrofit per-file min/max stats over `cols` onto the CURRENT
@@ -3104,7 +3185,8 @@ object Versioned {
           val bside = FileStats.readBloomSidecar(dfs, dir)
           FileStats.writeBloomSidecar(dfs, dir, bside.map { case (f, byCol) =>
             f -> byCol.filter { case (c, _) => !deadSet.contains(c.toLowerCase) }
-          }.filter(_._2.nonEmpty))
+          }.filter(_._2.nonEmpty),
+            bloomNames.filterNot(n => deadSet.contains(n.toLowerCase)))
           bloomDirs += dir
         }
         if (hasDeadStats || hasDeadBlooms) cleaned += 1

@@ -100,16 +100,67 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** `df`'s rows in Catalyst's internal encoding, collected as one SQL
-    * execution (the same action `collect()` runs, minus the conversion
-    * to external Rows) — what a plan pinned on the driver needs to serve
-    * its rows again through [[localFrame]] without a round trip through
-    * java.sql types. */
-  def collectInternal(df: org.apache.spark.sql.DataFrame)
-      : IndexedSeq[org.apache.spark.sql.catalyst.InternalRow] = {
+  /** `df`'s rows in Catalyst's internal encoding when their UnsafeRow
+    * bytes total at most `limit`, else the measured total (Left) — what
+    * a plan pinned on the driver needs to serve its rows again through
+    * [[localFrame]] without a round trip through java.sql types, with
+    * the driver never holding more than about `limit` bytes of them.
+    * One SQL execution, one job that computes EVERY partition (a
+    * persisted plan is thereby materialised, and the total is exact):
+    * each task ships its rows while its own bytes stay within `limit`
+    * and only its byte count past that; the driver drops what it holds
+    * once the running total passes `limit`. Rows already on the driver
+    * (a local table scan) are taken as they are, with no job. */
+  def collectBounded(df: org.apache.spark.sql.DataFrame, limit: Long)
+      : Either[Long, IndexedSeq[org.apache.spark.sql.catalyst.InternalRow]] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
     val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    val schema = df.schema
     org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect")) {
-      qe.executedPlan.executeCollect().map(_.copy()).toIndexedSeq
+      qe.executedPlan match {
+        case local: org.apache.spark.sql.execution.LocalTableScanExec =>
+          val rows = local.executeCollect().map(_.copy()).toIndexedSeq
+          val bytes = rows.iterator.map(_.asInstanceOf[UnsafeRow].getSizeInBytes.toLong).sum
+          if (bytes <= limit) Right(rows) else Left(bytes)
+        case plan =>
+          val rdd = plan.execute()
+          // per partition: (its UnsafeRow bytes, its rows length-prefixed
+          // as in SparkPlan's collect encoding, or null past `limit`)
+          val ship = (_: org.apache.spark.TaskContext, it: Iterator[InternalRow]) => {
+            lazy val toUnsafe = UnsafeProjection.create(schema)
+            val buf = new java.io.ByteArrayOutputStream()
+            val out = new java.io.DataOutputStream(buf)
+            val scratch = new Array[Byte](4096)
+            var bytes = 0L
+            it.foreach { r =>
+              val u = r match { case u: UnsafeRow => u; case o => toUnsafe(o) }
+              bytes += u.getSizeInBytes
+              if (bytes <= limit) { out.writeInt(u.getSizeInBytes); u.writeToStream(out, scratch) }
+            }
+            out.flush()
+            (bytes, if (bytes <= limit) buf.toByteArray else null)
+          }
+          val parts = new Array[Array[Byte]](rdd.getNumPartitions)
+          var total = 0L
+          rdd.sparkContext.runJob(rdd, ship, 0 until rdd.getNumPartitions,
+            (i: Int, res: (Long, Array[Byte])) => {
+              total += res._1
+              if (total <= limit) parts(i) = res._2
+              else java.util.Arrays.fill(parts.asInstanceOf[Array[AnyRef]], null)
+            })
+          if (total > limit) Left(total)
+          else Right(parts.toIndexedSeq.flatMap { p =>
+            val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(p))
+            Iterator.continually(in.available()).takeWhile(_ > 0).map { _ =>
+              val b = new Array[Byte](in.readInt())
+              in.readFully(b)
+              val row = new UnsafeRow(schema.length)
+              row.pointTo(b, b.length)
+              row: InternalRow
+            }.toIndexedSeq
+          })
+      }
     }
   }
 

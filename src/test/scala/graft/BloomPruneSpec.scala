@@ -197,4 +197,23 @@ class BloomPruneSpec extends SparkSpecBase {
     assert(total3 >= 2 && keptFiles(q3) < total3,
       s"OCC-packed blooms must prune: kept ${keptFiles(q3)} of $total3")
   }
+  test("an all-null bloom column gets no bloom but stays tracked; later values prune") {
+    val root = tmpRoot()
+    Versioned.commit(spark, (0L until 100L).map(i => (i, Option.empty[String])).toDF("id", "tag")
+      .coalesce(1), root, bloomCols = Seq("id", "tag"))
+    val f = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dir(b: Int) = new org.apache.hadoop.fs.Path(root, s"data/b$b")
+    assert(FileStats.readBloomSidecar(f, dir(1)).values.head.keySet == Set("id"),
+      "a column with no values gets no bloom")
+    assert(FileStats.readBloomColumns(f, dir(1)) == Set("id", "tag"))
+    // the merges' batches harvest the still-tracked column
+    Versioned.mergeInto(spark, root, Seq((200L, "t200"), (201L, "t201")).toDF("id", "tag"),
+      Seq("id"))
+    Versioned.mergeInto(spark, root, Seq((300L, "t300")).toDF("id", "tag"), Seq("id"))
+    assert(FileStats.readBloomSidecar(f, dir(2)).values.head.keySet == Set("id", "tag"))
+    val q = spark.read.format("graft-versioned").load(root).filter($"tag" === "t200")
+    assert(q.as[(Long, String)].collect().toSeq == Seq((200L, "t200")))
+    assert(keptFiles(q) == 2, "the bloom-less all-null file is kept, the t300 file pruned")
+    assert(spark.read.format("graft-versioned").load(root).filter($"tag".isNull).count() == 100)
+  }
 }

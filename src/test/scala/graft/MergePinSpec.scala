@@ -10,11 +10,16 @@ import org.apache.spark.sql.types._
 /** Both sides of the MERGE source selection: a source within
   * `spark.sql.autoBroadcastJoinThreshold` is pinned on the driver (key
   * filter, per-key-column file pruning, one-file batch with driver-built
-  * blooms), a larger one keeps the persisted join path. Every case runs
-  * the same merges on two identical tables — one at the default
-  * threshold, one with the threshold at -1, which forces the join path —
-  * and requires identical snapshots, versions and errors. The job-count
-  * and label pins hold the cost and observability of the writers. */
+  * blooms), a larger one keeps the persisted join path. The pin is
+  * decided by the plan's size estimate, else by the measured size: a
+  * join whose estimate is far above the threshold but whose rows fit is
+  * pinned, and a source estimated within but measuring above falls back.
+  * Every case runs the same merges on two identical tables — one at the
+  * default (or a given) threshold, one with the threshold at -1, which
+  * forces the join path — and requires identical snapshots, versions and
+  * errors. The job-count and label pins hold the cost and observability
+  * of the writers; declines are logged and a measured source is
+  * evaluated once. */
 class MergePinSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -48,13 +53,14 @@ class MergePinSpec extends SparkSpecBase {
   /** Build the same table twice, run `ops` on each — pinned at the
     * default threshold, joined at -1 — and require the same versions,
     * errors and snapshots. Returns the pinned side's snapshot. */
-  private def bothPaths(prefix: String)(build: String => Unit)
+  private def bothPaths(prefix: String, threshold: Option[String] = None)(build: String => Unit)
                        (ops: String => Seq[Either[String, Long]]): Seq[String] = {
     val pinned = tmpRoot(prefix)
     val joined = tmpRoot(prefix)
     build(pinned)
     build(joined)
-    val a = ops(pinned)
+    val a = threshold.fold(ops(pinned))(t =>
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> t)(ops(pinned)))
     val b = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(ops(joined))
     assert(a == b, "the two paths must return the same versions and messages")
     assert(snapshot(pinned) == snapshot(joined))
@@ -73,6 +79,34 @@ class MergePinSpec extends SparkSpecBase {
 
   private def local(schema: StructType, rows: Row*): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  private val factSchema = StructType(Seq(StructField("Date", DateType),
+    StructField("Article", StringType), StructField("Site", StringType),
+    StructField("Quantity", LongType), StructField("Cost", DecimalType(12, 2))))
+  private val promoSchema = StructType(Seq(StructField("Date", DateType),
+    StructField("Article", StringType), StructField("Site", StringType),
+    StructField("Amt", DecimalType(12, 2))))
+
+  /** The weekly sales report (two calendar-joined aggregates, full-outer
+    * merged) over seeded facts for 4 weeks, weeks `lo..hi`: a join whose
+    * plan estimate is far above any threshold, with few result rows. */
+  private def weekly(seed: Int, lo: Int, hi: Int): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    def day(i: Int) = java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(i))
+    def dec() = new java.math.BigDecimal(rnd.nextInt(10000)).movePointLeft(2)
+    def site() = (1000 + rnd.nextInt(7) * 1000).toString
+    val zmb = df(factSchema, (0 until 300).map(_ =>
+      Row(day(rnd.nextInt(28)), s"A${rnd.nextInt(12)}", site(), rnd.nextInt(50).toLong, dec())): _*)
+    val zst = df(promoSchema, (0 until 150).map(_ =>
+      Row(day(rnd.nextInt(28)), s"A${rnd.nextInt(12)}", site(), dec())): _*)
+    val calendar = local(StructType(Seq(StructField("Date", DateType),
+      StructField("AcctWk", IntegerType))), (0 until 28).map(i => Row(day(i), 1 + i / 7)): _*)
+    graft.pipelines.WeeklySalesPipeline.report(zmb, zst, calendar, lo, hi)
+  }
+
+  private def weeklyTable(r: String): Unit =
+    Versioned.commit(spark, weekly(1, 1, 2).coalesce(1), r, statsCols = Seq("AcctWk"),
+      bloomCols = Seq("Article"))
 
   test("KeyIn: generated and interpreted evaluation agree; a null component never matches") {
     import org.apache.spark.sql.catalyst.InternalRow
@@ -281,5 +315,94 @@ class MergePinSpec extends SparkSpecBase {
     val got = Versioned.read(spark, root).as[(Long, String)].collect().toMap
     assert(got(3L) == "u" && !got.contains(11L) && got(4L) == "u" && got(5L) == "m" &&
       got(500L) == "i" && got(6L) == "m" && got(7L) == "m")
+  }
+  test("a join source (the weekly sales report) estimated above the threshold is pinned by size") {
+    val keys = graft.pipelines.WeeklySalesPipeline.upsertKeys
+    assert(weekly(2, 2, 4).queryExecution.optimizedPlan.stats.sizeInBytes >
+      spark.sessionState.conf.autoBroadcastJoinThreshold, "the report must estimate above")
+    both.foreach { case (name, merge) =>
+      Versioned.lastPinDecline.set(null)
+      val out = bothPaths(s"graft_pin_weekly_$name")(weeklyTable) { r =>
+        Seq(outcome(merge(r, weekly(2, 2, 4), keys)), outcome(merge(r, weekly(3, 3, 4), keys)))
+      }
+      assert(Versioned.lastPinDecline.get == null, s"$name: ${Versioned.lastPinDecline.get}")
+      val weeks = out.map(_.split('|')(0).toInt).toSet
+      assert(weeks == Set(1, 2, 3, 4) && out.size > 40, s"$name: $out")
+    }
+  }
+
+  test("the weekly sales report merges in at most 9 jobs (copy-on-write), fewer than joined") {
+    val keys = graft.pipelines.WeeklySalesPipeline.upsertKeys
+    def jobs(): Int = {
+      val root = tmpRoot("graft_pin_weekly_jobs")
+      weeklyTable(root)
+      Versioned.mergeInto(spark, root, weekly(2, 2, 3), keys)
+      // the facts are checkpointed before the count starts
+      val src = weekly(3, 3, 4)
+      JobCount(spark)(Versioned.mergeInto(spark, root, src, keys))._2
+    }
+    val pinned = jobs()
+    val joined = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(jobs())
+    // the source's own stages (calendar broadcast, two aggregations, a
+    // broadcast side of the full-outer join, its collect), the probe,
+    // the write and the bloom harvest's two
+    assert(pinned <= 9, s"mergeInto of the weekly report ran $pinned jobs")
+    assert(pinned < joined, s"pinned $pinned jobs vs joined $joined")
+  }
+
+  test("a source estimated within the threshold but measuring above takes the join path") {
+    // explode's estimate is its child's size: one row of a range
+    def exploded = spark.range(1).select(explode(sequence(lit(0L), lit(299L))).as("a"))
+      .select(col("a"), concat(lit("k"), col("a").cast(StringType)).as("b"), lit("s").as("v"))
+    assert(exploded.queryExecution.optimizedPlan.stats.sizeInBytes <= 1024)
+    both.foreach { case (name, merge) =>
+      Versioned.lastPinDecline.set(null)
+      val out = bothPaths(s"graft_pin_explode_$name", threshold = Some("1024")) { r =>
+        Versioned.commit(spark, local(pairSchema, Row(5L, "k5", "t"), Row(1000L, "z", "t"))
+          .coalesce(1), r, statsCols = Seq("a"), bloomCols = Seq("a"))
+      } { r => Seq(outcome(merge(r, exploded, Seq("a", "b")))) }
+      val why = Versioned.lastPinDecline.get
+      assert(why != null && why.matches("measured \\d+ bytes > threshold 1024 bytes"), s"$name: $why")
+      assert(out.size == 301 && out.contains("5|k5|s") && out.contains("1000|z|t"), name)
+    }
+  }
+
+  test("a source measuring above the threshold is evaluated once, its decline logged") {
+    val calls = spark.sparkContext.longAccumulator("graft_pin_evaluations")
+    val tick = udf((v: String) => { calls.add(1L); v })
+    both.foreach { case (name, merge) =>
+      val root = tmpRoot(s"graft_pin_once_$name")
+      Versioned.commit(spark, local(pairSchema, Row(1L, "x", "t1"), Row(60L, "y", "t2"))
+        .coalesce(1), root, statsCols = Seq("a"))
+      val src = df(pairSchema, (1 to 50).map(i => Row(i.toLong, s"k$i", s"s$i")): _*)
+        .withColumn("v", tick(col("v")))
+      Versioned.lastPinDecline.set(null)
+      calls.reset()
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "100")(merge(root, src, Seq("a")))
+      assert(calls.value == 50L, s"$name evaluated the source's rows ${calls.value} times")
+      val why = Versioned.lastPinDecline.get
+      assert(why != null && why.matches("measured \\d+ bytes > threshold 100 bytes"), s"$name: $why")
+      val got = Versioned.read(spark, root).as[(Long, String, String)].collect()
+      assert(got.length == 51 && got.contains((1L, "k1", "s1")) && got.contains((60L, "y", "t2")),
+        name)
+    }
+  }
+
+  test("a key type without exact comparison declines with its type; -1 records nothing") {
+    val schema = StructType(Seq(StructField("k", DoubleType), StructField("v", StringType)))
+    both.foreach { case (name, merge) =>
+      val root = tmpRoot(s"graft_pin_decline_$name")
+      Versioned.commit(spark, local(schema, Row(1.0, "t")), root)
+      Versioned.lastPinDecline.set(null)
+      merge(root, local(schema, Row(1.0, "s")), Seq("k"))
+      val why = Versioned.lastPinDecline.get
+      assert(why != null && why.contains("double") && why.contains("compare exactly"),
+        s"$name: $why")
+      Versioned.lastPinDecline.set(null)
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(
+        merge(root, local(schema, Row(2.0, "s")), Seq("k")))
+      assert(Versioned.lastPinDecline.get == null, s"$name: the -1 threshold must record nothing")
+      assert(snapshot(root) == Seq("1.0|s", "2.0|s"), name)
+    }
   }
 }

@@ -8,8 +8,9 @@ import org.apache.spark.sql.types._
 /** The blooms a pinned merge source gets from its rows on the driver
   * ([[Versioned.driverBlooms]]) must be byte-for-byte the blooms the
   * harvest pass ([[Versioned.harvestBloomsFor]]) builds from the written
-  * file — for every bloom-supported type, an all-null column and both
-  * sides of the 64x headroom cap. A differing bit pattern would make a
+  * file — for every bloom-supported type, an all-null column (no bloom
+  * on either side, but still tracked) and both sides of the 64x headroom
+  * cap. A differing bit pattern would make a
   * lookup's probe answer differently for the same file, and a false
   * negative prunes a file that holds the key. */
 class BloomParitySpec extends graft.SparkSpecBase {
@@ -43,12 +44,16 @@ class BloomParitySpec extends graft.SparkSpecBase {
     val cols = schema.fieldNames.toSeq
     Versioned.harvestBloomsFor(spark, dir, files, schema, cols)
     val harvested = FileStats.readBloomSidecar(fs, dir).getOrElse(files.head.getName, Map.empty)
-    (harvested, Versioned.driverBlooms(spark, Bridge.collectInternal(frame), schema, cols))
+    // nulls are skipped: a column with no values gets no bloom, yet the
+    // sidecar header still tracks it
+    assert(FileStats.readBloomColumns(fs, dir) == cols.toSet)
+    val collected = Bridge.collectBounded(frame, Long.MaxValue).toOption.get
+    (harvested, Versioned.driverBlooms(spark, collected, schema, cols))
   }
 
   private def assertSame(n: Int): Map[String, Array[Byte]] = {
     val (harvested, driver) = both(n)
-    assert(harvested.keySet == driver.keySet && harvested.keySet == schema.fieldNames.toSet)
+    assert(harvested.keySet == driver.keySet && harvested.keySet == schema.fieldNames.toSet - "none")
     harvested.foreach { case (c, bytes) =>
       assert(java.util.Arrays.equals(bytes, driver(c)), s"bloom bytes of $c differ at $n rows")
     }
@@ -58,9 +63,9 @@ class BloomParitySpec extends graft.SparkSpecBase {
   test("driver-built blooms equal the harvested ones for every supported type") {
     assert(schema.fields.forall(f => FileStats.bloomSupported(f.dataType)))
     val small = assertSame(40)
-    // an all-null column still gets a bloom on both paths: xxhash64
-    // of a null is its seed, which the aggregate then inserts
-    assert(small.contains("none"))
+    // an all-null column gets no bloom on either path: nulls are fed to
+    // the aggregate as null, not as xxhash64(null) = 42
+    assert(!small.contains("none"))
     // 40 rows size for 64 x 40 items, well under the 100k cap
     val capped = try {
       spark.conf.set("spark.graft.bloom.expectedItems", "1000")
