@@ -2467,13 +2467,14 @@ object Versioned {
     * one estimated above (the estimator multiplies sizes across every
     * join, so a small join result can estimate far above) is persisted
     * and collected from the cache. Either collect is bounded
-    * ([[Bridge.collectBounded]]): a source measuring above the threshold
-    * is never held whole on the driver and takes the persisted path — its
-    * cache already warm when estimated above; re-evaluated once, into the
-    * cache, when its estimate was too low. A pinned source's dup check,
-    * emptiness and key set come from its rows; the probe keeps only the
-    * files whose stats and blooms can hold one of its values on every key
-    * column ([[StatsPrunedFileIndex.survivingFiles]]), and keys match
+    * ([[Bridge.collectBounded]]): the driver receives at most the
+    * threshold's bytes of rows, and a source measuring above it takes
+    * the persisted path — its cache already warm when estimated above;
+    * re-evaluated once, into the cache, when its estimate was too low.
+    * A pinned source's dup check, emptiness and key set come from its
+    * rows; the probe keeps only the files whose stats and blooms can hold
+    * one of its values on every key column
+    * ([[StatsPrunedFileIndex.survivingFiles]]), and keys match
     * through a broadcast [[KeyIn]] row filter — no build-side job. Any
     * other source is persisted, probed by [[sourceKeyProbe]] (single
     * stats-tracked non-float key: range-pruned probe) and matched by

@@ -104,12 +104,13 @@ object Bridge {
     * bytes total at most `limit`, else the measured total (Left) — what
     * a plan pinned on the driver needs to serve its rows again through
     * [[localFrame]] without a round trip through java.sql types, with
-    * the driver never holding more than about `limit` bytes of them.
-    * One SQL execution, one job that computes EVERY partition (a
-    * persisted plan is thereby materialised, and the total is exact):
-    * each task ships its rows while its own bytes stay within `limit`
-    * and only its byte count past that; the driver drops what it holds
-    * once the running total passes `limit`. Rows already on the driver
+    * the driver never receiving more than `limit` bytes of them. One SQL
+    * execution; its first job computes EVERY partition (a persisted plan
+    * is thereby materialised, and the total is exact), and each of its n
+    * tasks ships its rows only while they stay within limit / n bytes,
+    * else only its byte count. When the total fits, a second job fetches
+    * the partitions that were over their share — from the cache when the
+    * plan is persisted, recomputed otherwise. Rows already on the driver
     * (a local table scan) are taken as they are, with no job. */
   def collectBounded(df: org.apache.spark.sql.DataFrame, limit: Long)
       : Either[Long, IndexedSeq[org.apache.spark.sql.catalyst.InternalRow]] = {
@@ -125,41 +126,31 @@ object Bridge {
           if (bytes <= limit) Right(rows) else Left(bytes)
         case plan =>
           val rdd = plan.execute()
-          // per partition: (its UnsafeRow bytes, its rows length-prefixed
-          // as in SparkPlan's collect encoding, or null past `limit`)
-          val ship = (_: org.apache.spark.TaskContext, it: Iterator[InternalRow]) => {
+          val n = rdd.getNumPartitions
+          // a partition's (UnsafeRow bytes, its rows or null past `max`)
+          def ship(max: Long) = (_: org.apache.spark.TaskContext, it: Iterator[InternalRow]) => {
             lazy val toUnsafe = UnsafeProjection.create(schema)
-            val buf = new java.io.ByteArrayOutputStream()
-            val out = new java.io.DataOutputStream(buf)
-            val scratch = new Array[Byte](4096)
+            val rows = Array.newBuilder[UnsafeRow]
             var bytes = 0L
             it.foreach { r =>
               val u = r match { case u: UnsafeRow => u; case o => toUnsafe(o) }
               bytes += u.getSizeInBytes
-              if (bytes <= limit) { out.writeInt(u.getSizeInBytes); u.writeToStream(out, scratch) }
+              if (bytes <= max) rows += u.copy()
             }
-            out.flush()
-            (bytes, if (bytes <= limit) buf.toByteArray else null)
+            (bytes, if (bytes <= max) rows.result() else null)
           }
-          val parts = new Array[Array[Byte]](rdd.getNumPartitions)
+          val parts = new Array[Array[UnsafeRow]](n)
           var total = 0L
-          rdd.sparkContext.runJob(rdd, ship, 0 until rdd.getNumPartitions,
-            (i: Int, res: (Long, Array[Byte])) => {
-              total += res._1
-              if (total <= limit) parts(i) = res._2
-              else java.util.Arrays.fill(parts.asInstanceOf[Array[AnyRef]], null)
-            })
+          rdd.sparkContext.runJob(rdd, ship(limit / math.max(n, 1)), 0 until n,
+            (i: Int, res: (Long, Array[UnsafeRow])) => { total += res._1; parts(i) = res._2 })
           if (total > limit) Left(total)
-          else Right(parts.toIndexedSeq.flatMap { p =>
-            val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(p))
-            Iterator.continually(in.available()).takeWhile(_ > 0).map { _ =>
-              val b = new Array[Byte](in.readInt())
-              in.readFully(b)
-              val row = new UnsafeRow(schema.length)
-              row.pointTo(b, b.length)
-              row: InternalRow
-            }.toIndexedSeq
-          })
+          else {
+            val over = (0 until n).filter(parts(_) == null)
+            if (over.nonEmpty)
+              rdd.sparkContext.runJob(rdd, ship(limit), over,
+                (j: Int, res: (Long, Array[UnsafeRow])) => parts(over(j)) = res._2)
+            Right(parts.toIndexedSeq.flatMap(_.toIndexedSeq))
+          }
       }
     }
   }

@@ -18,8 +18,9 @@ import org.apache.spark.sql.types._
   * default (or a given) threshold, one with the threshold at -1, which
   * forces the join path — and requires identical snapshots, versions and
   * errors. The job-count and label pins hold the cost and observability
-  * of the writers; declines are logged and a measured source is
-  * evaluated once. */
+  * of the writers; declines are logged, a measured source is evaluated
+  * once, and the bounded collect ships the driver at most the threshold's
+  * bytes however its rows spread over partitions. */
 class MergePinSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -385,6 +386,63 @@ class MergePinSpec extends SparkSpecBase {
       val got = Versioned.read(spark, root).as[(Long, String, String)].collect()
       assert(got.length == 51 && got.contains((1L, "k1", "s1")) && got.contains((60L, "y", "t2")),
         name)
+    }
+  }
+
+  /** The serialized task-result bytes the driver receives during `body`. */
+  private def resultBytes[A](body: => A): (A, Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val got = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => got.addAndGet(m.resultSize))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.graftx.Bridge.drainListeners(spark, 60000)
+      (out, got.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("the bounded collect ships at most its limit to the driver, however the rows spread") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+    import org.apache.spark.sql.graftx.Bridge
+    val limit = 400L * 1024
+    // 20 partitions of about 80 KB: each within the limit, together four
+    // times over it
+    val wide = spark.range(0, 16000, 1, 20).select(col("id").as("a"),
+      concat(lit("k"), col("id").cast(StringType)).as("b"), lit("x" * 64).as("v"))
+    val all = Bridge.collectBounded(wide, Long.MaxValue).toOption.get
+    val bytes = all.map(_.asInstanceOf[UnsafeRow].getSizeInBytes.toLong).sum
+    assert(all.size == 16000 && bytes > 4 * limit)
+    val (over, shipped) = resultBytes(Bridge.collectBounded(wide, limit))
+    assert(over == Left(bytes), "the measured total is exact")
+    assert(shipped < limit, s"the driver received $shipped bytes for a limit of $limit")
+    // within the limit, but every full partition over its twentieth:
+    // those are fetched by a second job, in partition order
+    val skewed = wide.filter(col("a") < 3000L)
+    val (rows, jobs) = JobCount(spark)(Bridge.collectBounded(skewed, limit).toOption.get)
+    assert(rows.map(_.getLong(0)) == (0L until 3000L) && jobs == 2, s"$jobs jobs")
+    // both writers: the skewed source is pinned by size, the wide one
+    // falls back to the join path; the snapshots match the -1 run
+    assert(skewed.queryExecution.optimizedPlan.stats.sizeInBytes > limit)
+    both.foreach { case (name, merge) =>
+      val declines = scala.collection.mutable.Buffer[String]()
+      val out = bothPaths(s"graft_pin_spread_$name", threshold = Some(limit.toString)) { r =>
+        Versioned.commit(spark, local(pairSchema, Row(5L, "k5", "t"), Row(-1L, "z", "t"))
+          .coalesce(1), r, statsCols = Seq("a"), bloomCols = Seq("a"))
+      } { r =>
+        Seq(skewed, wide).map { src =>
+          Versioned.lastPinDecline.set(null)
+          val got = outcome(merge(r, src, Seq("a", "b")))
+          declines += Versioned.lastPinDecline.get
+          got
+        }
+      }
+      assert(declines == Seq(null, s"measured $bytes bytes > threshold $limit bytes", null, null),
+        s"$name: $declines")
+      assert(out.size == 16001 && out.contains("5|k5|" + "x" * 64) && out.contains("-1|z|t"), name)
     }
   }
 
