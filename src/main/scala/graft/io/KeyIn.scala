@@ -116,14 +116,19 @@ object KeyIn {
 
   private def unpack(packed: Array[Byte], numFields: Int): java.util.HashSet[UnsafeRow] = {
     val set = new java.util.HashSet[UnsafeRow]()
+    unpackRows(packed, numFields).foreach(set.add)
+    set
+  }
+
+  /** The rows [[pack]] packed, in order, each over its own bytes. */
+  private[graft] def unpackRows(packed: Array[Byte], numFields: Int): Iterator[UnsafeRow] = {
     val in = java.nio.ByteBuffer.wrap(packed)
-    while (in.hasRemaining) {
+    Iterator.continually(in).takeWhile(_.hasRemaining).map { in =>
       val bytes = new Array[Byte](in.getInt)
       in.get(bytes)
       val row = new UnsafeRow(numFields)
       row.pointTo(bytes, bytes.length)
-      set.add(row)
+      row
     }
-    set
   }
 }

@@ -190,9 +190,10 @@ object AnnIndex {
     // arithmetically a cumulative scan over ≤ 2M integers. Same exact
     // integer arithmetic (position = ceil(p·n/100), value = smallest
     // qcos whose cumulative count reaches it), same rows out.
-    val hist = qcos.filter(col("qcos").isNotNull)
-      .groupBy(col("qcos")).agg(count(lit(1)).as("__c"))
-      .collect()
+    val hist = graft.JobDesc(spark, "ann drift: quantile histogram")(
+      qcos.filter(col("qcos").isNotNull)
+        .groupBy(col("qcos")).agg(count(lit(1)).as("__c"))
+        .collect())
     val sorted = hist.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     var n = 0L
     sorted.foreach(n += _._2)
@@ -418,7 +419,7 @@ object AnnIndex {
     * `cluster` min/max stats harvest alongside the vec_id stats/blooms,
     * so [[search]]'s probed-cell IN filter skips every file holding no
     * probed cell — without this the inverted-list read is O(n) in FILES
-    * SCANNED even though the semi join prunes the rows, and the scan
+    * SCANNED even though the search's cell filter prunes the rows, and the scan
     * itself becomes the floor of every narrow search. The tradeoff is
     * stated: cluster-sorted files scatter any given id range across
     * files, so the maintenance sink's bloom-guard probes prune less
@@ -913,7 +914,7 @@ object AnnIndex {
     * touched, so after many triggers the table accretes wide-cluster-
     * range files the probed-cell IN can never skip — pruned [[search]]
     * degrades toward reading every maintenance file even while its
-    * row-level semi join still prunes. [[rebuild]] fixes the layout as
+    * row-level cell filter still prunes. [[rebuild]] fixes the layout as
     * a side effect but pays the full n·k·m corpus re-encode for codes
     * that ALREADY EXIST in the table; this is the cheap remedy when
     * only the LAYOUT eroded: one shuffle of the code rows (re-ranged
@@ -1439,22 +1440,18 @@ object AnnIndex {
       queries.dropDuplicates(Seq("vec_id")), cent, nprobe = nprobe)
     // The assigned query set is MATERIALIZED once (bounded: queries are
     // the broadcast-small side by contract; a cap guards the collect
-    // like the sink's id collect) and serves three consumers that would
-    // otherwise each re-evaluate it — and with it whatever corpus-sized
-    // scan backs `queries`: the probed-cell list, the broadcast query
-    // side of the candidate join, and the semi-join prune. Measured on
-    // the 1M-vector fixture, the re-evaluations were the narrow
-    // search's floor, not the codes read.
+    // like the sink's id collect) into a local relation, which
+    // ivfPqTopKIndexed carries inside the plan: the probed-cell list and
+    // the scoring both read it on the driver, so whatever corpus-sized
+    // scan backs `queries` is evaluated once.
     //
-    // FILE-level pruning on top of ivfPqTopKIndexed's row-level semi
-    // join: the probed cells push into the versioned scan as an IN
-    // filter, which the per-file cluster stats [[commitCodes]]
-    // harvested turn into skipped files. Without this the semi join
-    // prunes ROWS but the inverted-list read still scans every file.
-    // Result-invisible: the filter keeps exactly the rows the semi
-    // join keeps. The scan must be the `graft-versioned` DSv2 path —
-    // only it consults the stats sidecars; Versioned.read is a plain
-    // parquet read of the manifest's files. (The DSv2 scan refuses
+    // FILE-level pruning: the probed cells push into the versioned scan
+    // as an IN filter, which the per-file cluster stats [[commitCodes]]
+    // harvested turn into skipped files (and parquet into skipped row
+    // groups). The IN is row-exact, so ivfPqTopKIndexed's own cell
+    // filter drops nothing more. The scan must be the `graft-versioned`
+    // DSv2 path — only it consults the stats sidecars; Versioned.read is
+    // a plain parquet read of the manifest's files. (The DSv2 scan refuses
     // DV-carrying snapshots; the codes table is replace/append-only by
     // contract, so that can only trip a user who hand-deleted from the
     // index — loudly.)
@@ -1608,14 +1605,17 @@ object AnnIndex {
     * (~1.4–1.9 s: model read, query-assignment job, Catalyst planning,
     * stage scheduling) dominates a narrow probe. The handle pays the
     * model read ONCE — centroids and codebook are k-row frames, collected
-    * to the driver here and re-broadcast from local relations per call
-    * (LocalTableScan broadcasts never launch a job) — resolves the codes
-    * scan (file listing + stats/bloom sidecar load, a lazy per-table
-    * index) once, and runs query assignment DRIVER-SIDE against the
-    * in-memory centroids: queries are the broadcast-small side by
-    * contract, so |q|·k kernel-exact cosines on the driver replace a
-    * whole Spark job. Per-call work is therefore exactly the pruned
-    * candidate join over the probed cells.
+    * to the driver here, and the codebook's fused-kernel arrays resolve
+    * here too ([[Similarity.collectCodebook]]; so a change of
+    * `spark.graft.fusedAnn` applies from the next prepare, as the auto
+    * band does) — resolves the codes scan (file listing + stats/bloom
+    * sidecar load, a lazy per-table index) once, and runs query
+    * assignment DRIVER-SIDE against the in-memory centroids: queries
+    * are the broadcast-small side by contract, so |q|·k kernel-exact
+    * cosines on the driver replace a whole Spark job. Per-call work is
+    * therefore exactly the scoring of the probed cells' candidates, with
+    * the assigned batch carried inside the plan (see
+    * [[Similarity.ivfPqTopKIndexed]]): two Spark jobs.
     *
     * Snapshot semantics: the handle serves the snapshot CURRENT AT
     * PREPARE TIME of both tables (the model rows collect here; the codes
@@ -1639,9 +1639,10 @@ object AnnIndex {
     // a degenerate cellLabelCol could mint millions of cells — cap the
     // collect loudly instead of cliffing the driver (the same guard
     // discipline as every other driver-side collect in this file)
-    val rows = t.filter(col("part").isin("cent", "book", "meta"))
-      .select(col("part"), col("rlabel"), col("vec"))
-      .limit(65538).collect()
+    val rows = graft.JobDesc(spark, s"ann model read: $modelRoot")(
+      t.filter(col("part").isin("cent", "book", "meta"))
+        .select(col("part"), col("rlabel"), col("vec"))
+        .limit(65538).collect())
     // the cap prices cent+book rows; the single mandatory meta row rides
     // along in the same snapshot read and must not count against it
     require(rows.count(_.getString(0) != "meta") <= 65536,
@@ -1694,9 +1695,15 @@ object AnnIndex {
       codesTable.prunedIndex.allFiles().map { f =>
         (f.getPath.getParent.getName, f.getPath.getName) -> f.getLen
       }.toMap
-    new PreparedAnnSearch(spark, assignLocal, bookLocal, dsub, codesRel,
-      codesTable, codesTable.prunedIndex.keepProbe("cluster"), bookDriver,
-      fileBytes)
+    // the fused-kernel codebook arrays, resolved once here (a change of
+    // `spark.graft.fusedAnn` applies from the next prepare, like every
+    // other prepare-time input); packed codes only, as in the direct form
+    val fusedBook =
+      if (codes.columns.contains("codes")) Similarity.collectCodebook(bookLocal)
+      else None
+    new PreparedAnnSearch(spark, assignLocal, bookLocal, fusedBook, dsub,
+      codesRel, codesTable, codesTable.prunedIndex.keepProbe("cluster"),
+      bookDriver, fileBytes)
   }
 
   /** The versioned DSv2 relation + table behind a freshly-loaded
@@ -1944,19 +1951,21 @@ private[ops] final class DriverAssign(
 }
 
 /** The reusable search handle [[AnnIndex.prepare]] returns: model
-  * materialized once (driver-held centroids, local-relation codebook),
-  * codes scan resolved once, per-call cost = driver-side query
-  * assignment + the probed-cell candidate join. See [[AnnIndex.prepare]]
+  * materialized once (driver-held centroids, codebook resolved to the
+  * fused kernels' arrays), codes scan resolved once, per-call cost =
+  * driver-side query assignment + one scan → reconstruct → score →
+  * partial top-k stage and the final top-k. See [[AnnIndex.prepare]]
   * for the snapshot and equality contracts. THREAD-SAFE for concurrent
   * searches (the serving shape): all per-call state — assignment
   * arrays, keep-set, derived keep table, plan — is call-local; the
-  * shared pieces (centroids, codebook frame, resolved relation, decoded
+  * shared pieces (centroids, codebook, resolved relation, decoded
   * bounds) are read-only after prepare. Spec-pinned by the concurrent
   * spec. */
 final class PreparedAnnSearch private[ops] (
     spark: SparkSession,
     assignLocal: DriverAssign,
     bookLocal: DataFrame,
+    fusedBook: Option[(Array[Long], Array[Array[Double]])],
     dsub: Int,
     codesRel: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation,
     codesTable: graft.io.VersionedReadTable,
@@ -1979,9 +1988,11 @@ final class PreparedAnnSearch private[ops] (
     * once at prepare) and bake into a derived scan of the SAME resolved
     * snapshot, so per-call plans differ only in leaf data — whole-stage
     * codegen compiles once and is cache-hit on every later call, where
-    * the literal form re-planned AND re-compiled per probed set. Row
-    * exactness is untouched: [[Similarity.ivfPqTopKIndexed]]'s cluster
-    * semi/equi joins keep exactly the probed cells' rows, so kept files
+    * the literal form re-planned AND re-compiled per probed set. The
+    * assigned query batch rides the same way: by reference inside one
+    * expression ([[graft.functions.CellQueries]]), which prints and
+    * compiles the same for every batch. Row exactness is untouched: its
+    * cell filter keeps exactly the probed cells' rows, so kept files
     * holding other cells contribute nothing (result-invisible — the
     * handle-equals-direct spec pins it).
     *
@@ -1990,7 +2001,7 @@ final class PreparedAnnSearch private[ops] (
     * granularity) cannot — so on an ERODED layout, where accreted
     * maintenance files span every cell and file pruning keeps them for
     * any probe, the handle reads those files whole and discards at the
-    * join. That regime is exactly what the layout loop exists to bound:
+    * cell filter. That regime is exactly what the layout loop exists to bound:
     * [[AnnIndex.needsRecell]]/the monitor sink detect it, [[AnnIndex.recell]]/
     * [[AnnIndex.recellSmall]] repair it (repaired tails are cell-RANGED, so
     * they prune at file granularity again), and under the recelled
@@ -2041,7 +2052,7 @@ final class PreparedAnnSearch private[ops] (
     local.getOrElse {
       val pruned = org.apache.spark.sql.graftx.Bridge.ofRows(spark,
         codesRel.copy(table = codesTable.withKeep(keep)))
-      Similarity.ivfPqTopKIndexed(pruned, qaLocal, bookLocal, dsub, k)
+      Similarity.ivfPqTopKIndexed(pruned, qaLocal, bookLocal, fusedBook, dsub, k)
     }
   }
 
@@ -2090,9 +2101,12 @@ final class PreparedAnnSearch private[ops] (
   /** The DRIVER-LOCAL serve path behind the `localBytesCap` dial — the
     * r16 verdict's "missing #4" posture decision, taken as the measured
     * path rather than a waiver. Rationale: at the narrow-serving floor
-    * the distributed candidate join is 4–6 stage-serialized near-empty
-    * jobs whose cost is local-mode SCHEDULING, not work (r16 task
-    * accounting); when the kept volume is tiny the candidates fit on
+    * the distributed search's cost is local-mode SCHEDULING, not work —
+    * even as two jobs (the scoring stage and the final top-k behind its
+    * exchange), warm searches at 5k vectors, 16 queries, local[4]
+    * measured 338 ms distributed against 223 ms under the auto dial at
+    * nprobe 4, and 239 against 149 ms at nprobe 1; when the kept volume
+    * is tiny the candidates fit on
     * the driver, where the centroids and codebook already live. This
     * path runs ONE job — collecting the kept files' code rows through
     * the SAME literal-free keep-set scan the distributed path plans
@@ -2563,8 +2577,8 @@ final class PreparedBinarySearch private[ops] (
       alternative = "the direct AnnIndex.binarySearch")
     // file pruning via the runtime keep-set (bounds decoded at prepare),
     // not a per-call IN literal — row exactness comes from
-    // binaryShortlistPruned's cluster equi-join, exactly as the PQ
-    // handle's semi join carries it
+    // binaryShortlistPruned's cluster equi-join, as the PQ handle's
+    // cell filter carries it
     val (rel, table, keepFor) = fpKeep.getOrElse(throw new IllegalStateException(
       "prepared binarySearch(nprobe): celled handle missing its keep probe"))
     val prunedFp = org.apache.spark.sql.graftx.Bridge.ofRows(spark,

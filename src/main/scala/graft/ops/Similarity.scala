@@ -1136,14 +1136,14 @@ object Similarity {
     (corpusAssigned.schema("embedding").dataType, book.schema("cvec").dataType) match {
       case (ArrayType(FloatType, _), ArrayType(DoubleType, _)) =>
         collectCodebook(book) match {
-          case Some((labels, books)) =>
+          case fused @ Some((labels, books)) =>
             val rlt = book.schema("rlabel").dataType
             return ivfPqTopKIndexed(
               corpusAssigned.select(col("vec_id"), col("cluster"),
                 graft.functions.GraftExpressions.pqCodesAll(
                   col("embedding"), books, labels, m, dsub)
                   .cast(ArrayType(rlt)).as("codes")),
-              queryAssigned, book, dsub, k)
+              queryAssigned, book, fused, dsub, k)
           case None => ()
         }
       case _ => ()
@@ -1157,11 +1157,10 @@ object Similarity {
 
   /** [[ivfPqTopK]] against a PREBUILT codes frame — the persisted-index
     * search path: raw corpus embeddings are never touched, only the
-    * m-byte codes plus the broadcast codebook. This is what makes the
-    * index maintainable incrementally (new vectors encode map-side
-    * against the frozen book and append — see
-    * `Streams.versionedAnnIndexSink`) and searchable at 100 TB where
-    * the raw vectors don't fit anywhere.
+    * m-byte codes plus the codebook. This is what makes the index
+    * maintainable incrementally (new vectors encode map-side against the
+    * frozen book and append — see `Streams.versionedAnnIndexSink`) and
+    * searchable at 100 TB where the raw vectors don't fit anywhere.
     *
     * TWO accepted codes shapes, detected by schema:
     *   - PACKED (vec_id, cluster, codes) — one row per vector, codes[i]
@@ -1169,50 +1168,57 @@ object Similarity {
     *     and the maintenance sink appends): reconstruction is a narrow
     *     MAP-SIDE projection per candidate (the fused
     *     [[graft.functions.Kernels.pqReconstructK]] lookup against the
-    *     collected book), so the per-search reconstruct groupBy exchange
-    *     is GONE — scan → broadcast-join → heap agg is the whole plan.
+    *     collected book), evaluated once per candidate.
     *   - exploded (vec_id, cluster, sub, code) — m rows per vector (the
     *     pre-packing table layout, still served for compatibility):
     *     codes⋈book join + (nid, cluster) groupBy, as before.
     * Rows out are identical across the shapes (PackedCodesSpec A/Bs
-    * them, the oracle pins the packed path end to end). */
+    * them, the oracle pins the packed path end to end).
+    *
+    * TWO query-side shapes, detected by plan:
+    *   - HELD on the driver — `queryAssigned` optimizes to a local
+    *     relation, as both ANN search entry points build it after
+    *     assigning on the driver: the batch travels with the plan inside one
+    *     [[graft.functions.CellQueries]] expression, and the search is
+    *     one narrow map-side pipeline — candidates whose cell some query
+    *     probes → reconstruct → emit the cell's queries → cosine →
+    *     partial top-k — then one exchange and the final top-k: two
+    *     Spark jobs, none of them for the query side.
+    *   - distributed (any other frame; the jumbo fallback past the
+    *     handles' 10k-row cap): the candidates are pruned by a broadcast
+    *     LEFT SEMI join against the distinct probed clusters (≤
+    *     |queries|·nprobe values — always broadcastable) and scored
+    *     under a broadcast equi join with the query side.
+    * Both keep exactly the probed cells' candidates and pair them with
+    * the same queries, so rows out are identical (AnnSearchPlanSpec
+    * A/Bs the two shapes). */
   def ivfPqTopKIndexed(codes: DataFrame, queryAssigned: DataFrame,
-                       book: DataFrame, dsub: Int, k: Int): DataFrame = {
-    val q = queryAssigned.select(col("vec_id").as("qid"),
-      col("embedding").as("qvec"), col("cluster"))
-    // Candidate pruning BEFORE reconstruction: IVF's whole point is that
-    // a search touches only the probed cells' inverted lists, but Catalyst
-    // cannot push the cluster-membership filter through the nid join into
-    // the reconstruct aggregation on its own (that would need runtime
-    // filter injection through an Aggregate). So prune structurally: a
-    // broadcast LEFT SEMI join of the codes table against the distinct
-    // probed clusters (≤ |queries|·nprobe values — always broadcastable)
-    // keeps the candidate rows exactly as the final cluster equi-join
-    // would. Result-invisible by construction; work is O(probed cells),
-    // not O(n).
-    val probed = q.select(col("cluster")).distinct()
-    val cand = codes.join(broadcast(probed), Seq("cluster"), "left_semi")
-    val compressed =
-      if (codes.columns.contains("codes")) {
-        // PACKED reconstruct: map-side codeword lookup per candidate when
-        // the book collects (labels must be distinct — the join's
-        // duplicate-label row multiplication has no lookup equivalent);
-        // otherwise explode back to the row shape and take the join plan
-        // below. The isNotNull filter mirrors the inner join: a vector
-        // none of whose codes hit the book never produced a
-        // reconstruction group.
-        collectCodebook(book) match {
-          case Some((labels, books)) if labels.length == labels.distinct.length =>
-            cand.select(col("vec_id").as("nid"), col("cluster"),
-              graft.functions.GraftExpressions.pqReconstructK(
-                col("codes").cast("array<long>"), books, labels, dsub)
-                .as("xhat"))
-              .filter(col("xhat").isNotNull)
-          case _ =>
-            reconstructRows(cand.select(col("vec_id"), col("cluster"),
-              posexplode(col("codes")).as(Seq("sub", "code"))), book, dsub)
-        }
-      } else reconstructRows(cand, book, dsub)
+                       book: DataFrame, dsub: Int, k: Int): DataFrame =
+    ivfPqTopKIndexed(codes, queryAssigned, book,
+      if (codes.columns.contains("codes")) collectCodebook(book) else None,
+      dsub, k)
+
+  /** [[ivfPqTopKIndexed]] with `book`'s [[collectCodebook]] result
+    * already resolved (`fused`; None serves the row-plan reconstruction)
+    * — the prepared handle resolves it once, at prepare. */
+  private[graft] def ivfPqTopKIndexed(
+      codes: DataFrame, queryAssigned: DataFrame, book: DataFrame,
+      fused: Option[(Array[Long], Array[Array[Double]])], dsub: Int,
+      k: Int): DataFrame = {
+    val pairs = heldQueries(queryAssigned, codes.schema("cluster").dataType) match {
+      case Some(cellQueries) =>
+        // the cell filter is the semi join's row-exact equivalent, and
+        // runs before reconstruction so an unprobed row costs one lookup
+        reconstructed(codes.filter(cellQueries.isNotNull), book, fused, dsub)
+          .select(col("nid"), col("cluster"), col("xhat"), inline(cellQueries))
+      case None =>
+        val q = queryAssigned.select(col("vec_id").as("qid"),
+          col("embedding").as("qvec"), col("cluster"))
+        val probed = q.select(col("cluster")).distinct()
+        reconstructed(codes.join(broadcast(probed), Seq("cluster"), "left_semi"),
+          book, fused, dsub)
+          .join(broadcast(q), Seq("cluster"))
+    }
     // final rank via the MIXED-direction bounded heap, not a window: the
     // (cos_pq DESC, nid ASC) ordering made this the one ranker
     // RewriteKeepFirst/TopKPairs couldn't serve, so every search paid an
@@ -1222,8 +1228,7 @@ object Similarity {
     // query), so rows are identical to the window form's (oracle-pinned
     // across the whole ivf-pq family).
     import graft.functions.GraftExpressions.topKRowsSorted
-    compressed.join(broadcast(q), Seq("cluster"))
-      .filter(col("qid") =!= col("nid"))
+    pairs.filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), col("cluster"),
         graft.functions.GraftExpressions.cosineFD(col("qvec"), col("xhat"))
           .as("cos_pq"))
@@ -1236,6 +1241,48 @@ object Similarity {
         col("col.cluster").as("cluster"), col("col.cos_pq").as("cos_pq"),
         (col("pos") + 1).cast("int").as("rank"))
   }
+
+  /** The [[graft.functions.CellQueries]] column over `cluster` for a
+    * query side held on the driver (one that optimizes to a local
+    * relation): None for any other frame, and when the candidates'
+    * cluster type differs from the query side's or is not one
+    * [[graft.io.KeyIn.supports]] compares exactly — the broadcast
+    * join's type coercion is not replicated. */
+  private def heldQueries(queryAssigned: DataFrame,
+                          codesCluster: DataType): Option[Column] =
+    queryAssigned.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if Seq("vec_id", "embedding", "cluster").forall(l.schema.fieldNames.contains) &&
+            l.schema("cluster").dataType == codesCluster &&
+            graft.io.KeyIn.supports(codesCluster) =>
+        val at = l.schema.fieldIndex _
+        Some(graft.functions.CellQueries.column(col("cluster"), l.data,
+          l.schema.map(_.dataType), at("cluster"), at("vec_id"), at("embedding")))
+      case _ => None
+    }
+
+  /** The candidates' reconstructions (nid, cluster, xhat). PACKED codes
+    * reconstruct map-side when the book collected with distinct labels
+    * (the join's duplicate-label row multiplication has no lookup
+    * equivalent); otherwise they explode back to the row shape for the
+    * join plan. A vector none of whose codes hit the book yields no row,
+    * as in the inner join — dropped by a generator rather than a filter,
+    * because Catalyst pushes a filter on the alias below this projection
+    * and would evaluate the reconstruction a second time there. */
+  private def reconstructed(cand: DataFrame, book: DataFrame,
+                            fused: Option[(Array[Long], Array[Array[Double]])],
+                            dsub: Int): DataFrame =
+    if (cand.columns.contains("codes")) fused match {
+      case Some((labels, books)) if labels.length == labels.distinct.length =>
+        cand.select(col("vec_id").as("nid"), col("cluster"),
+          graft.functions.GraftExpressions.pqReconstructK(
+            col("codes").cast("array<long>"), books, labels, dsub).as("__x"))
+          .select(col("nid"), col("cluster"),
+            explode(when(col("__x").isNotNull, array(col("__x")))).as("xhat"))
+      case _ =>
+        reconstructRows(cand.select(col("vec_id"), col("cluster"),
+          posexplode(col("codes")).as(Seq("sub", "code"))), book, dsub)
+    } else reconstructRows(cand, book, dsub)
 
   /** The exploded-shape reconstruction: the home cell rides INSIDE the
     * reconstruction groupBy (a vector's cluster is constant across its m
