@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
 object Prof {
   def main(args: Array[String]): Unit = {
     // SPARK_GRAFT_PROF_CONFS="k=v;k=v" applies session confs before the
-    // dump — e.g. the optimization kill-switches (spark.graft.fusedAnn,
-    // spark.graft.fanoutSmallBytes=0, spark.graft.localCcMaxEdges=0) to
+    // dump — e.g. the optimization kill-switches
+    // (spark.graft.fanoutSmallBytes=0, spark.graft.localCcMaxEdges=0) to
     // print the pre-optimization plan of the same query for comparison.
     val builder = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")

@@ -112,35 +112,6 @@ object GraftExpressions {
       copy(left = newLeft, right = newRight)
   }
 
-  /** Fused subspace cosine for PQ encode — see [[Kernels.subCosineFD]].
-    * `dsub` is a plan-time constant (the PQ geometry), so it rides as a
-    * constructor param; `sub` is the exploded subspace column. The result
-    * is nullable beyond its children (mismatched clamped windows / null
-    * elements), hence the boxed-return codegen. */
-  case class SubCosineFDExpr(a: Expression, b: Expression, sub: Expression, dsub: Int)
-      extends TernaryExpression with GraftExpectsInputTypes {
-    override def first: Expression = a
-    override def second: Expression = b
-    override def third: Expression = sub
-    override def graftInputTypes: Seq[DataType] =
-      Seq(ArrayType(FloatType), ArrayType(DoubleType), IntegerType)
-    override def dataType: DataType = DoubleType
-    override def nullable: Boolean = true
-    override protected def nullSafeEval(av: Any, bv: Any, sv: Any): Any =
-      Kernels.subCosineFD(
-        av.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-        bv.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-        sv.asInstanceOf[Int], dsub)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (av, bv, sv) => s"""
-        java.lang.Double graftSubCos = graft.functions.Kernels.subCosineFD($av, $bv, $sv, $dsub);
-        if (graftSubCos == null) { ${ev.isNull} = true; } else { ${ev.value} = graftSubCos.doubleValue(); }
-      """)
-    override protected def withNewChildrenInternal(
-        newFirst: Expression, newSecond: Expression, newThird: Expression): SubCosineFDExpr =
-      copy(a = newFirst, b = newSecond, sub = newThird)
-  }
-
   // Fused whole-codebook ANN kernels (see Kernels scaladoc): the
   // codeword matrix rides as a driver-collected reference object
   // (ascending-label order — the tie-break contract), not as child
@@ -148,7 +119,7 @@ object GraftExpressions {
   // materializing n·k(·m) crossJoin rows. eval() is deliberately NOT
   // null-safe on the embedding: a null embedding must still assign /
   // encode (all scores -Inf → smallest labels), exactly like the
-  // coalesce(score, -Inf) row plans these replace.
+  // coalesce(score, -Inf) heap selection.
 
   /** CONTENT-stable identity for the whole-codebook expressions, which
     * embed driver-collected Java arrays: arrays compare and print by
@@ -287,11 +258,9 @@ object GraftExpressions {
   }
 
   /** [[Kernels.pqReconstructK]] over a packed codes array — the map-side
-    * reconstruction that replaces the row-shape codes⋈book join +
-    * per-vector groupBy in the packed-codes search path. Null in → null
-    * out; null also when no element found a codeword (the row plan's
-    * vanished group — callers filter those rows out to match the inner
-    * join). */
+    * reconstruction of the packed-codes search path. Null in → null
+    * out; null also when no element found a codeword (callers drop
+    * those rows). */
   case class PqReconstructKExpr(child: Expression, books: Array[Array[Double]],
                                 labels: Array[Long], dsub: Int)
       extends UnaryExpression with GraftExpectsInputTypes with CodebookArgs {
@@ -435,8 +404,6 @@ object GraftExpressions {
   def cosineD(a: Column, b: Column): Column = Bridge.column(CosineExpr(expr(a), expr(b)))
   def cosineFD(a: Column, b: Column): Column = Bridge.column(CosineFDExpr(expr(a), expr(b)))
 
-  def subCosineFD(a: Column, b: Column, sub: Column, dsub: Int): Column =
-    Bridge.column(SubCosineFDExpr(expr(a), expr(b), expr(sub), dsub))
   def nearestKLabels(emb: Column, cents: Array[Array[Double]],
                      labels: Array[Long], nprobe: Int): Column =
     Bridge.column(NearestKLabelsExpr(expr(emb), cents, labels, nprobe))

@@ -222,45 +222,6 @@ object Kernels {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Subspace cosine for PQ encoding: [[cosineFD]] over the window
-    * [sub·dsub, sub·dsub+dsub) of a FLOAT vector `a` against the same
-    * window of a DOUBLE codeword vector `b` — fused replacement for the
-    * slice + zip_with + aggregate composition that dominated every
-    * corpus encode pass (3 interpreted folds and 5 array allocations per
-    * (vector, subspace, codeword) row). Semantics replicate the
-    * composition EXACTLY, edge cases included:
-    *   - window lengths are clamped to each array's end, like slice();
-    *     unequal clamped lengths → null (zip_with pads the shorter side
-    *     with null, nulling the fold), equal-but-short windows fold over
-    *     the truncated window;
-    *   - any null element inside either window → null (the null product
-    *     nulls the fold);
-    *   - both windows empty → 0/(0·0) = NaN, exactly what the composed
-    *     Divide produces;
-    *   - accumulation is the same sequential left fold per accumulator,
-    *     so finite results are bit-identical (SubCosineSpec pins it).
-    * Returns a boxed Double so null can propagate. */
-  def subCosineFD(a: ArrayData, b: ArrayData, sub: Int, dsub: Int): java.lang.Double = {
-    val off = sub * dsub
-    val la = math.max(0, math.min(dsub, a.numElements() - off))
-    val lb = math.max(0, math.min(dsub, b.numElements() - off))
-    if (la != lb) return null
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < la) {
-      if (a.isNullAt(off + i) || b.isNullAt(off + i)) return null
-      val x = a.getFloat(off + i).toDouble
-      val y = b.getDouble(off + i)
-      dot += x * y
-      na += x * x
-      nb += y * y
-      i += 1
-    }
-    java.lang.Double.valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
-  }
-
   /** Binary (1-bit/dim) sign fingerprint: word w's bit i is set iff
     * component w·32+i is non-null and > 0. One primitive pass — the
     * equivalent 64-CaseWhen column composition measured ~40 µs/row
@@ -299,8 +260,8 @@ object Kernels {
   // implemented by iterating labels in ascending order and replacing
   // only on strictly-greater score; a null score (null embedding, null
   // window, clamped-window mismatch) scores -Infinity, exactly the
-  // coalesce(score, -Inf) the row plans applied. FusedAnnSpec pins
-  // row-identity against the crossJoin paths, edge cases included.
+  // coalesce(score, -Inf) of the composed selection. FusedAnnSpec pins the
+  // selections against a scalar reference, edge cases included.
   // -------------------------------------------------------------------
 
   /** Score of `emb` (float, may be null) against full codeword `c`
@@ -356,8 +317,19 @@ object Kernels {
     new GenericArrayData(out)
   }
 
-  /** [[subCosineFD]] against codeword `c` with the null-window → -Inf
-    * substitution inlined (caller guarantees c has no null elements). */
+  /** Subspace cosine for PQ encoding: [[cosineFD]] over the window
+    * [sub·dsub, sub·dsub+dsub) of a FLOAT vector `emb` against the same
+    * window of codeword `c` (caller guarantees c has no null elements),
+    * with the semantics of the slice + zip_with + aggregate composition
+    * (KernelSpec pins the encode against it, edge cases included):
+    *   - window lengths are clamped to each array's end, like slice();
+    *     unequal clamped lengths score -Inf (zip_with pads the shorter
+    *     side with null, nulling the fold), equal-but-short windows fold
+    *     over the truncated window;
+    *   - a null embedding or a null element inside the window → -Inf
+    *     (the null fold, coalesced);
+    *   - both windows empty → 0/(0·0) = NaN, what the composed Divide
+    *     produces. */
   private def subScore(emb: ArrayData, c: Array[Double],
                        sub: Int, dsub: Int): Double = {
     if (emb == null) return Double.NegativeInfinity
@@ -379,8 +351,8 @@ object Kernels {
 
   /** The m PQ codes of `emb` under the codebook (rows aligned with
     * ascending `labels`): argmax subspace cosine per sub, ties to the
-    * smallest label — the fused form of pqEncode's crossJoin + explode
-    * + graft_topk(1). Returns array[m] of labels. */
+    * smallest label (the composed crossJoin + explode + graft_topk(1)
+    * selection, one call per vector). Returns array[m] of labels. */
   def pqCodesAll(emb: ArrayData, books: Array[Array[Double]],
                  labels: Array[Long], m: Int, dsub: Int): ArrayData = {
     val k = books.length
@@ -407,10 +379,9 @@ object Kernels {
   /** Quantized reconstruction cosine of `emb` under the codebook: encode
     * ([[pqCodesAll]] selection), assemble xhat from the chosen codeword
     * windows, then floor(cosineFD(emb, xhat) · 2^20) with Spark's
-    * floor-to-long semantics — the fused form of pqEncode →
-    * pqReconstruct → join → cosineFD → floor. Null embedding → null
-    * (the join path's cosineFD(null, xhat)). `byLabel` maps label →
-    * codebook row (aligned with `labels`' ascending order). */
+    * floor-to-long semantics — encode, [[pqReconstructK]]'s assembly,
+    * cosineFD and floor in one pass. Null embedding → null. `books`
+    * rows align with `labels`' ascending order. */
   def pqReconCosQ(emb: ArrayData, books: Array[Array[Double]],
                   labels: Array[Long], m: Int, dsub: Int): java.lang.Long = {
     if (emb == null) return null
@@ -458,20 +429,16 @@ object Kernels {
   }
 
   /** Reconstruction from a PACKED codes array (element i = subquantizer
-    * i's code label): xhat assembled exactly as the row-shape plan's
-    * codes⋈book inner join + slice(cvec, sub·dsub+1, dsub) +
-    * sub-ordered flatten —
+    * i's code label): xhat is the concatenation, in sub order, of each
+    * code's codeword window slice(cvec, sub·dsub+1, dsub) —
     *   - a null element or a label absent from the book contributes
-    *     NOTHING (the inner join's drop of that (sub) row);
+    *     NOTHING;
     *   - a found codeword appends min(dsub, max(0, len−off)) components
     *     (Spark slice semantics on a short row);
-    *   - null when NO element found a codeword (such a vector never
-    *     produced a reconstruction group in the row plan) and for a
-    *     null codes array (no rows to join at all).
-    * `books` rows align with ascending `labels` (the collectCodebook
-    * shape); the caller guarantees labels are DISTINCT — duplicate book
-    * labels would need the join's row multiplication, which this lookup
-    * cannot replicate. */
+    *   - null when NO element found a codeword, and for a null codes
+    *     array.
+    * `books` rows align with ascending, DISTINCT `labels` (the
+    * Similarity.pqKernelBook shape). */
   def pqReconstructK(codes: ArrayData, books: Array[Array[Double]],
                      labels: Array[Long], dsub: Int): ArrayData = {
     if (codes == null) return null

@@ -58,57 +58,18 @@ object AnnIndex {
     * floor(cosine(raw, PQ reconstruction) · 2^20) as LONG — the same
     * integer-quantization discipline as [[Similarity.quantizedCentroids]]
     * (scaling by a power of two is exact in IEEE, so the quantized value
-    * is engine-identical wherever the cosine is). One column out; the
-    * raw vectors are read once and never shuffled (encode is map-side
-    * under the broadcast book; the reconstruct groupBy and the vec_id
-    * join are the only exchanges, both on the narrow id). */
-  private def reconCosQ(emb: DataFrame, book: DataFrame,
-                        m: Int, dsub: Int): DataFrame = {
-    // FUSED path (Similarity.collectCodebook): encode → reconstruct →
-    // cosine → quantize runs as ONE narrow map-side projection per
-    // vector — the encode's crossJoin + heap exchange, the reconstruct
-    // groupBy and the vec_id join (three corpus exchanges) disappear.
-    // Recompute-not-join: the kernel re-derives the codes from the same
-    // frozen book (deterministic ⇒ identical codes ⇒ identical xhat ⇒
-    // bit-identical qcos), trading k·m dots per vector for corpus
-    // shuffles — the cheap side at any scale where encode is map-side.
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
-    emb.schema("embedding").dataType match {
-      case ArrayType(FloatType, _) =>
-        Similarity.collectCodebook(book) match {
-          case Some((labels, books)) =>
-            return Similarity.fanOutSmall(emb.select(col("embedding")))
-              .select(graft.functions.GraftExpressions.pqReconCosQ(
-                col("embedding"), books, labels, m, dsub).as("qcos"))
-          case None => ()
-        }
-      case _ => ()
-    }
-    reconCosQFromCodes(emb,
-      Similarity.pqEncode(emb.select(col("vec_id"), col("embedding")),
-        book, m, dsub), book, dsub)
+    * is engine-identical wherever the cosine is). Encode → reconstruct →
+    * cosine → quantize run as ONE narrow map-side projection per vector
+    * (the fused `pqReconCosQ` kernel): the raw vectors are read once and
+    * never shuffled. Out: the `keep` columns, then `qcos`. */
+  private def reconCosQ(emb: DataFrame, book: DataFrame, m: Int, dsub: Int,
+                        keep: Seq[String] = Nil): DataFrame = {
+    Similarity.requireFloatEmbeddings(emb)
+    val (labels, books) = Similarity.pqKernelBook(book)
+    Similarity.fanOutSmall(emb.select((keep :+ "embedding").map(col): _*))
+      .select(keep.map(col) :+ graft.functions.GraftExpressions.pqReconCosQ(
+        col("embedding"), books, labels, m, dsub).as("qcos"): _*)
   }
-
-  /** [[reconCosQ]] with the encode already done — the shared-pass form
-    * [[trainAndRebuild]] uses so the codes computed for the index also
-    * price the baseline. */
-  private def reconCosQFromCodes(emb: DataFrame, codes: DataFrame,
-                                 book: DataFrame, dsub: Int): DataFrame =
-    Similarity.pqReconstruct(
-      codes.select(col("vec_id"), col("sub"), col("code")), book, dsub)
-      .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .select(floor(graft.functions.GraftExpressions.cosineFD(
-        col("embedding"), col("xhat")) * lit(1048576d))
-        .cast("long").as("qcos"))
-
-  /** [[reconCosQFromCodes]] over the PACKED codes shape — the exploded
-    * rows are exactly what the packed row compresses, so the quantiles
-    * are unchanged. Non-fused trainAndRebuild path only. */
-  private def reconCosQFromPacked(emb: DataFrame, codes: DataFrame,
-                                  book: DataFrame, dsub: Int): DataFrame =
-    reconCosQFromCodes(emb,
-      codes.select(col("vec_id"),
-        posexplode(col("codes")).as(Seq("sub", "code"))), book, dsub)
 
   /** ONE (vec_id, cluster, codes) row per corpus vector under the frozen
     * (centroids, book) pair — THE index row shape every codes-table
@@ -116,54 +77,18 @@ object AnnIndex {
     * maintenance sink, fixture late-appends), so build and maintenance
     * rows can never drift apart. codes[i] is subquantizer i's label
     * (packed: m× fewer rows and no per-vector grouping anywhere
-    * downstream — guide §2.3/§6). Fused kernels when they apply (float
-    * embeddings, collectible k-row frames): assignment AND encode in one
-    * narrow map-side projection — no corpus shuffle at all; fallback:
-    * the heap assignment joined to the packed heap encode by vec_id.
-    * Row-identical across the paths (FusedAnnSpec/PackedCodesSpec). */
+    * downstream — guide §2.3/§6). The codes column rides the
+    * [[Similarity.assignClusters]] frame, so there is no join: with the
+    * fused assignment, assignment AND encode are one narrow map-side
+    * projection — no corpus shuffle at all. */
   private[graft] def encodeCodes(emb: DataFrame, cent: DataFrame,
                                  book: DataFrame, m: Int,
-                                 dsub: Int): DataFrame =
-    encodeCodesEx(emb, cent, book, m, dsub)._1
-
-  /** [[encodeCodes]] plus whether the fused one-projection path applied
-    * — [[trainAndRebuild]] uses the flag to pick the cheaper drift
-    * recompute. */
-  private def encodeCodesEx(emb: DataFrame, cent: DataFrame,
-                            book: DataFrame, m: Int,
-                            dsub: Int): (DataFrame, Boolean) = {
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
-    emb.schema("embedding").dataType match {
-      case ArrayType(FloatType, _) =>
-        (for {
-          (clabels, cents) <- Similarity.collectCodebook(cent)
-          (blabels, books) <- Similarity.collectCodebook(book)
-        } yield {
-          val clt = cent.schema("rlabel").dataType
-          val blt = book.schema("rlabel").dataType
-          (Similarity.fanOutSmall(emb.select(col("vec_id"), col("embedding")))
-            .select(col("vec_id"),
-              element_at(graft.functions.GraftExpressions.nearestKLabels(
-                col("embedding"), cents, clabels, 1), 1)
-                .cast(clt).as("cluster"),
-              graft.functions.GraftExpressions.pqCodesAll(
-                col("embedding"), books, blabels, m, dsub)
-                .cast(ArrayType(blt)).as("codes")), true)
-        }).getOrElse((encodeCodesRowFallback(emb, cent, book, m, dsub), false))
-      case _ => (encodeCodesRowFallback(emb, cent, book, m, dsub), false)
-    }
+                                 dsub: Int): DataFrame = {
+    val codes = Similarity.pqCodes(emb, book, m, dsub)
+    Similarity.assignClusters(emb.select(col("vec_id"), col("embedding")),
+      cent, nprobe = 1)
+      .select(col("vec_id"), col("cluster"), codes.as("codes"))
   }
-
-  /** The non-fused [[encodeCodes]] shape: heap assignment joined to the
-    * packed heap encode — the kill-switch / exotic-type path. */
-  private def encodeCodesRowFallback(emb: DataFrame, cent: DataFrame,
-                                     book: DataFrame, m: Int,
-                                     dsub: Int): DataFrame =
-    Similarity.assignClusters(emb, cent, nprobe = 1)
-      .select(col("vec_id"), col("cluster"))
-      .join(Similarity.pqEncodePacked(
-        emb.select(col("vec_id"), col("embedding")), book, m, dsub),
-        Seq("vec_id"))
 
   /** Deterministic position quantiles of the quantized cosine column:
     * the value at ascending position ceil(p·n/100) — an exact order
@@ -369,16 +294,11 @@ object AnnIndex {
       else Similarity.pqCodebook(emb)
     val bookDf = graft.JobDesc(spark, "ann train: book refine")(
       Iterate.pinLocal(Similarity.pqRefineBook(emb, book0, m, dsub)))
-    // codes frame: assign AND encode in ONE map-side projection when the
-    // fused kernels apply (float embeddings, collectible k-row frames) —
-    // the old shape's assign heap exchange, encode heap exchange and
-    // vec_id equi-join (three corpus shuffles) collapse into a narrow
-    // scan — PACKED: one (vec_id, cluster, codes) row per vector (m×
-    // fewer rows than the exploded (vec_id, sub, code) shape the table
-    // stored before; exploding the array reproduces those rows exactly).
-    val (codes0, fusedCodes) = encodeCodesEx(emb, centDf, bookDf, m, dsub)
+    // codes frame: assign AND encode in ONE map-side projection (see
+    // [[encodeCodes]]) — PACKED: one (vec_id, cluster, codes) row per
+    // vector
     val codes = graft.JobDesc(spark, "ann train: codes encode")(
-      codes0.localCheckpoint())
+      encodeCodes(emb, centDf, bookDf, m, dsub).localCheckpoint())
     val cent = centDf
       .select(lit("cent").as("part"), col("rlabel"), col("cvec").as("vec"))
     val book = bookDf
@@ -387,14 +307,10 @@ object AnnIndex {
     val meta = spark.range(0, 1, 1, 1).select(lit("meta").as("part"),
       lit(m).cast(rlabelType).as("rlabel"),
       array(lit(dsub.toDouble)).as("vec"))
-    // drift baseline: with the fused kernels the whole measurement is a
-    // map-side recompute under the same frozen book (identical codes ⇒
-    // bit-identical quantiles — see reconCosQ), cheaper than joining
-    // the pinned codes back to the corpus by vec_id; without them the
-    // shared-pass FromCodes form keeps saving the second encode.
-    val drift = positionQuantiles(
-      if (fusedCodes) reconCosQ(emb, bookDf, m, dsub)
-      else reconCosQFromPacked(emb, codes, bookDf, dsub))
+    // drift baseline: a map-side recompute under the same frozen book
+    // (identical codes ⇒ bit-identical quantiles — see reconCosQ),
+    // cheaper than joining the pinned codes back to the corpus by vec_id
+    val drift = positionQuantiles(reconCosQ(emb, bookDf, m, dsub))
       .select(lit("drift").as("part"),
         col("pct").cast(rlabelType).as("rlabel"),
         array(col("q").cast("double")).as("vec"))
@@ -621,16 +537,7 @@ object AnnIndex {
     val baseline = baselineRows
       .map(r => (asInt(r.get(1)), r.getSeq[Double](2).head.toLong)).toSeq
       .toDF("pct", "baseline_q")
-    val qcos = Similarity.pqReconstruct(
-      Similarity.pqEncode(emb.select(col("vec_id"), col("embedding")),
-        book, m, dsub), book, dsub)
-      .join(emb.select(col("vec_id"), col("embedding"), col("batch_id")),
-        Seq("vec_id"))
-      .select(col("batch_id"),
-        floor(graft.functions.GraftExpressions.cosineFD(
-          col("embedding"), col("xhat")) * lit(1048576d))
-          .cast("long").as("qcos"))
-    positionQuantilesBy(qcos)
+    positionQuantilesBy(reconCosQ(emb, book, m, dsub, keep = Seq("batch_id")))
       .select(col("batch_id"), col("pct"), col("q").as("current_q"))
       .join(broadcast(baseline), Seq("pct"))
       .select(col("batch_id"), col("pct"), col("baseline_q"), col("current_q"),
@@ -808,8 +715,8 @@ object AnnIndex {
     * a hot cell degrades probed-cell search toward O(n) on that cell
     * even while [[driftStats]]'s quality probes stay quiet (a shifted
     * distribution can still reconstruct fine inside the book's span).
-    * Cost: one codes-table aggregation (the sub=0 row per vector — a
-    * pushed scan filter — grouped by cluster), NO corpus encode; the
+    * Cost: one codes-table aggregation (one packed row per vector,
+    * grouped by cluster), NO corpus encode; the
     * shares divide by totals over the k-row cell frame, so the
     * partition-less windows are bounded by the centroid count however
     * large the index. A cell empty on one side reports count 0 there
@@ -841,12 +748,10 @@ object AnnIndex {
         t.schema("rlabel").copy(name = "cluster"),
         org.apache.spark.sql.types.StructField("baseline_cnt",
           org.apache.spark.sql.types.LongType))))
-    // PACKED codes tables carry one row per vector already; the exploded
-    // pre-packing layout (compatibility) counts its sub=0 row per vector
+    // packed codes: one row per vector
     val curT = Versioned.read(spark, codesRoot)
-    val cur = (if (curT.columns.contains("sub"))
-        curT.filter(col("sub") === 0) else curT)
-      .groupBy(col("cluster")).agg(count(lit(1)).as("current_cnt"))
+    Similarity.requirePackedCodes(curT, "cellStats", codesRoot)
+    val cur = curT.groupBy(col("cluster")).agg(count(lit(1)).as("current_cnt"))
     val wAll = Window.partitionBy(lit(1))
     occ.join(cur, Seq("cluster"), "full_outer")
       .na.fill(0L, Seq("baseline_cnt", "current_cnt"))
@@ -1456,6 +1361,7 @@ object AnnIndex {
     // contract, so that can only trip a user who hand-deleted from the
     // index — loudly.)
     val codes = spark.read.format("graft-versioned").load(codesRoot)
+    Similarity.requirePackedCodes(codes, "search", codesRoot)
     val qaRows = qa.limit(10001).collect()
     if (qaRows.length <= 10000) {
       val qaLocal = spark.createDataFrame(
@@ -1606,10 +1512,9 @@ object AnnIndex {
     * stage scheduling) dominates a narrow probe. The handle pays the
     * model read ONCE — centroids and codebook are k-row frames, collected
     * to the driver here, and the codebook's fused-kernel arrays resolve
-    * here too ([[Similarity.collectCodebook]]; so a change of
-    * `spark.graft.fusedAnn` applies from the next prepare, as the auto
-    * band does) — resolves the codes scan (file listing + stats/bloom
-    * sidecar load, a lazy per-table index) once, and runs query
+    * here too ([[Similarity.pqKernelBook]], which refuses a book the
+    * kernels cannot serve) — resolves the codes scan (file listing +
+    * stats/bloom sidecar load, a lazy per-table index) once, and runs query
     * assignment DRIVER-SIDE against the in-memory centroids: queries
     * are the broadcast-small side by contract, so |q|·k kernel-exact
     * cosines on the driver replace a whole Spark job. Per-call work is
@@ -1664,9 +1569,8 @@ object AnnIndex {
     val assignLocal = new DriverAssign(spark,
       cent.map(_.get(1)).toIndexedSeq,
       cent.map(_.getSeq[Double](2).toArray).toIndexedSeq, rlabelType)
-    // book as a LOCAL k-row frame in the (rlabel, cvec) shape
-    // ivfPqTopKIndexed broadcasts — values identical to model()'s
-    // distributed frame, so results cannot differ
+    // book as a LOCAL k-row frame in model()'s (rlabel, cvec) shape,
+    // resolved to the fused kernels' arrays below
     val bookSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("rlabel", rlabelType),
       org.apache.spark.sql.types.StructField("cvec",
@@ -1677,33 +1581,18 @@ object AnnIndex {
         org.apache.spark.sql.Row(r.get(1), r.getSeq[Double](2))): _*),
       bookSchema)
     val codes = spark.read.format("graft-versioned").load(codesRoot)
-    require(Seq("vec_id", "cluster").forall(codes.columns.contains) &&
-      (codes.columns.contains("codes") ||
-        Seq("sub", "code").forall(codes.columns.contains)),
-      s"prepare: the codes table at $codesRoot is not an IVF-PQ codes " +
-        s"table (needs vec_id, cluster and codes — or the exploded " +
-        s"sub, code pair; has ${codes.columns.mkString(",")})")
+    Similarity.requirePackedCodes(codes, "prepare", codesRoot)
     val (codesRel, codesTable) = versionedRelOf(codes, "prepare", codesRoot)
-    // the local-serve dial's driver-held inputs: the codebook as a map
-    // (keys normalized so an int code column still hits a long-labeled
-    // book, like the distributed join's implicit cast), and the
-    // snapshot's file lengths (hit-only against the shared status
-    // cache — the listing already happened when the scan resolved)
-    val bookDriver: Map[Any, Array[Double]] = bookRows.map(r =>
-      PreparedAnnSearch.normId(r.get(1)) -> r.getSeq[Double](2).toArray).toMap
+    // the local-serve dial's snapshot file lengths (hit-only against the
+    // shared status cache — the listing already happened when the scan
+    // resolved)
     val fileBytes: Map[(String, String), Long] =
       codesTable.prunedIndex.allFiles().map { f =>
         (f.getPath.getParent.getName, f.getPath.getName) -> f.getLen
       }.toMap
-    // the fused-kernel codebook arrays, resolved once here (a change of
-    // `spark.graft.fusedAnn` applies from the next prepare, like every
-    // other prepare-time input); packed codes only, as in the direct form
-    val fusedBook =
-      if (codes.columns.contains("codes")) Similarity.collectCodebook(bookLocal)
-      else None
-    new PreparedAnnSearch(spark, assignLocal, bookLocal, fusedBook, dsub,
-      codesRel, codesTable, codesTable.prunedIndex.keepProbe("cluster"),
-      bookDriver, fileBytes)
+    new PreparedAnnSearch(spark, assignLocal, Similarity.pqKernelBook(bookLocal),
+      dsub, codesRel, codesTable, codesTable.prunedIndex.keepProbe("cluster"),
+      fileBytes)
   }
 
   /** The versioned DSv2 relation + table behind a freshly-loaded
@@ -1964,16 +1853,13 @@ private[ops] final class DriverAssign(
 final class PreparedAnnSearch private[ops] (
     spark: SparkSession,
     assignLocal: DriverAssign,
-    bookLocal: DataFrame,
-    fusedBook: Option[(Array[Long], Array[Array[Double]])],
+    kernelBook: (Array[Long], Array[Array[Double]]),
     dsub: Int,
     codesRel: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation,
     codesTable: graft.io.VersionedReadTable,
     keepFor: Seq[Any] => Set[(String, String)],
-    // the driver-local serve dial's inputs, both resolved at prepare:
-    // code label -> centroid-residual codebook row, and each snapshot
-    // file's byte length (for the kept-volume eligibility gate)
-    bookDriver: Map[Any, Array[Double]],
+    // each snapshot file's byte length, resolved at prepare (the
+    // driver-local serve dial's kept-volume eligibility gate)
     fileBytes: Map[(String, String), Long]) {
 
   /** [[AnnIndex.search]] against the prepared pair: byte-identical rows,
@@ -2052,7 +1938,7 @@ final class PreparedAnnSearch private[ops] (
     local.getOrElse {
       val pruned = org.apache.spark.sql.graftx.Bridge.ofRows(spark,
         codesRel.copy(table = codesTable.withKeep(keep)))
-      Similarity.ivfPqTopKIndexed(pruned, qaLocal, bookLocal, fusedBook, dsub, k)
+      Similarity.ivfPqTopKIndexed(pruned, qaLocal, kernelBook, dsub, k)
     }
   }
 
@@ -2113,13 +1999,12 @@ final class PreparedAnnSearch private[ops] (
     * (same pruning, same DV refusals, stable cached codegen) — then
     * reconstructs, scores and ranks driver-side, row-identical to the
     * distributed form (dial-equality spec-pinned at every probe width):
-    * scoring calls the SAME `Kernels.cosineFD` the distributed plan
-    * codegens (over driver-wrapped arrays — shared kernel, not a
-    * replica), ranking replicates `topKRowsSorted`'s (cos_pq DESC,
-    * nid ASC) total order via Double.compare (NaN above all) with UTF8
+    * reconstruction and scoring call the SAME `Kernels.pqReconstructK`
+    * and `Kernels.cosineFD` the distributed plan codegens (over
+    * driver-wrapped arrays — shared kernels, not replicas), ranking
+    * replicates `topKRowsSorted`'s (cos_pq DESC, nid ASC) total order via Double.compare (NaN above all) with UTF8
     * binary order on string ids, candidate membership replicates the
-    * probed-cluster semi join and the (nid, cluster) reconstruction
-    * grouping with the distributed joins' numeric widening
+    * probed-cluster semi join with its numeric widening
     * ([[PreparedAnnSearch.normId]]), and null ids drop exactly like
     * the SQL `=!=`/equi-join null semantics (a null-qid query yields
     * zero rows; null-nid/cluster candidates drop). Bounds: eligibility
@@ -2129,8 +2014,9 @@ final class PreparedAnnSearch private[ops] (
     * distributed join — rather than diverge or crash on: a batch with
     * a NULL query embedding (those ride the distributed kernel's null
     * semantics, not a replica of them), a candidate whose
-    * reconstruction is not full-dim (unknown code / missing sub — a
-    * codes table not encoded with THIS book), a query vector longer
+    * reconstruction is not full-dim (unknown code — a codes table not
+    * encoded with THIS book) or that repeats a (nid, cluster) row, a
+    * query vector longer
     * than the book's dimension, non-integral non-string id types, and
     * id/cluster comparisons across KINDS (string vs numeric — Spark's
     * coercion there is not replicated). Declines that depend only on
@@ -2142,18 +2028,14 @@ final class PreparedAnnSearch private[ops] (
     import graft.ops.PreparedAnnSearch.normId
     val qa = qaLocal.collect() // LocalRelation: driver-side, no job
     if (qa.exists(_.isNullAt(1))) return None
-    val fullDim = bookDriver.valuesIterator.map(_.length).toSet match {
-      case one if one.size == 1 => one.head
+    val fullDim = kernelBook._2.map(_.length).distinct match {
+      case Array(one) => one
       case _ => return None // mixed-width book rows: malformed model
     }
     val prunedAll = org.apache.spark.sql.graftx.Bridge.ofRows(spark,
       codesRel.copy(table = codesTable.withKeep(keep)))
-    // PACKED codes tables (the build/maintenance shape) collect one row
-    // per vector; the exploded pre-packing layout keeps its row shape
-    val packed = prunedAll.columns.contains("codes")
-    val prunedDf =
-      if (packed) prunedAll.select(col("vec_id"), col("cluster"), col("codes"))
-      else prunedAll.select(col("vec_id"), col("cluster"), col("sub"), col("code"))
+    // packed codes: one row per vector
+    val prunedDf = prunedAll.select(col("vec_id"), col("cluster"), col("codes"))
     val nidType = prunedDf.schema("vec_id").dataType
     val clType = prunedDf.schema("cluster").dataType
     val qidType = qaLocal.schema("vec_id").dataType
@@ -2183,79 +2065,52 @@ final class PreparedAnnSearch private[ops] (
     if (!fullDimOk) return None
     val candRows = prunedDf.collect() // the ONE job; <= localBytesCap bytes
 
-    // ---- reconstruct per candidate, replicating the distributed shape:
-    // semi join on probed clusters (numeric-widened keys, like the
-    // implicit cast), inner join codes->book, grouping by (nid, cluster),
-    // pieces sliced from the FULL-dim book row and concatenated in sub
-    // order; null nid/cluster rows drop like the joins drop them
+    // ---- reconstruct per candidate with the SAME lookup kernel the
+    // distributed plan codegens: candidates of the probed clusters
+    // (numeric-widened keys, like the semi join's implicit cast); null
+    // nid/cluster rows drop like the joins drop them
     val probedSet = qa.map(r => normId(r.get(2))).toSet
-    val acc = new java.util.HashMap[(Any, Any),
-      (Any, Any, scala.collection.mutable.ArrayBuffer[(Int, Any)])]()
-    var ci = 0
-    while (ci < candRows.length) {
-      val r = candRows(ci)
-      if (!r.isNullAt(0) && !r.isNullAt(1)) {
-        val cl = r.get(1)
-        if (probedSet.contains(normId(cl))) {
-          val nid = r.get(0)
-          val key = (normId(nid), normId(cl))
-          var e = acc.get(key)
-          if (e == null) {
-            e = (nid, cl, scala.collection.mutable.ArrayBuffer.empty[(Int, Any)])
-            acc.put(key, e)
-          }
-          if (packed) {
-            // one packed row per vector: element i is sub i's code. A
-            // null array or null element is not a shape this replica
-            // models — decline into the distributed path (which filters
-            // or skips them by its own join/kernel semantics).
-            if (r.isNullAt(2)) return None
-            val it = r.getSeq[Any](2).iterator
-            var si = 0
-            while (it.hasNext) {
-              val cv = it.next()
-              if (cv == null) return None
-              e._3 += ((si, cv))
-              si += 1
-            }
-          } else {
-            if (r.isNullAt(2) || r.isNullAt(3)) return None // malformed codes
-            e._3 += ((r.getAs[Number](2).intValue(), r.get(3)))
-          }
-        }
-      }
-      ci += 1
-    }
+    val (labels, books) = kernelBook
     // cluster(normalized) -> [(nidOrig, nidNorm, clOrig, xhat)]
     val byCluster = new java.util.HashMap[Any,
       scala.collection.mutable.ArrayBuffer[
         (Any, Any, Any, org.apache.spark.sql.catalyst.util.ArrayData)]]()
-    val accIt = acc.entrySet().iterator()
-    while (accIt.hasNext) {
-      val en = accIt.next()
-      val (nidOrig, clOrig, pairs) = en.getValue
-      // the distributed shape's slice(cvec, sub*dsub+1, dsub): each book
-      // row is FULL-dim and subquantizer `sub` owns elements
-      // [sub*dsub, sub*dsub+dsub)
-      val xhat = pairs.sortBy(_._1).iterator.flatMap { p =>
-        bookDriver.get(normId(p._2)) match {
-          case Some(cv) => cv.iterator.slice(p._1 * dsub, p._1 * dsub + dsub)
-          case None => Iterator.empty
+    val seen = new java.util.HashSet[(Any, Any)]()
+    var ci = 0
+    while (ci < candRows.length) {
+      val r = candRows(ci)
+      if (!r.isNullAt(0) && !r.isNullAt(1) && probedSet.contains(normId(r.get(1)))) {
+        val key = (normId(r.get(0)), normId(r.get(1)))
+        // a repeated (nid, cluster) row, a null codes array or element,
+        // or a code that is not a long — shapes this path does not
+        // model — decline into the distributed path
+        if (!seen.add(key) || r.isNullAt(2)) return None
+        val cs = r.getSeq[Any](2)
+        val codes = new Array[Any](cs.length)
+        var si = 0
+        while (si < codes.length) {
+          codes(si) = cs(si) match {
+            case n: Number => n.longValue()
+            case t: String if t.toLongOption.isDefined => t.toLong
+            case _ => return None
+          }
+          si += 1
         }
-      }.toArray
-      // a short reconstruction means the codes were not encoded with
-      // THIS book — behavior there is undefined territory the
-      // distributed path wanders with garbage reads; decline instead
-      if (xhat.length != fullDim) return None
-      val clKey = en.getKey._2
-      var lst = byCluster.get(clKey)
-      if (lst == null) {
-        lst = scala.collection.mutable.ArrayBuffer
-          .empty[(Any, Any, Any, org.apache.spark.sql.catalyst.util.ArrayData)]
-        byCluster.put(clKey, lst)
+        val xhat = graft.functions.Kernels.pqReconstructK(
+          new org.apache.spark.sql.catalyst.util.GenericArrayData(codes),
+          books, labels, dsub)
+        // a short or missing reconstruction means the codes were not
+        // encoded with THIS book — undefined territory; decline instead
+        if (xhat == null || xhat.numElements() != fullDim) return None
+        var lst = byCluster.get(key._2)
+        if (lst == null) {
+          lst = scala.collection.mutable.ArrayBuffer
+            .empty[(Any, Any, Any, org.apache.spark.sql.catalyst.util.ArrayData)]
+          byCluster.put(key._2, lst)
+        }
+        lst += ((r.get(0), key._1, r.get(1), xhat))
       }
-      lst += ((nidOrig, en.getKey._1, clOrig,
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(xhat)))
+      ci += 1
     }
 
     // ---- score and rank per query: the SAME kernel the distributed

@@ -108,21 +108,6 @@ object Dedup {
   /** Hamming distance between two 32-bit fingerprints. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** Connected components over a near-dup pair graph by iterative
-    * min-label propagation: every node's label converges to the smallest
-    * node id in its component, which IS the deterministic cluster id (and
-    * the canonical keeper for cluster-level dedup — pairs alone under-
-    * delete, since near-dup is transitive in practice but not in pairs).
-    *
-    * Each iteration is one join + one min-aggregate; the driver-side
-    * `count()` is the convergence check (standard for iterative graph
-    * algorithms — the data never leaves the cluster, only the changed-row
-    * count does). Converges in O(component diameter) iterations; dedup
-    * graphs are shallow (boilerplate stars), so a handful in practice.
-    * Per-iteration lineage is truncated via [[Iterate.pin]] — reliable
-    * `checkpoint()` when the session has a checkpoint dir, else
-    * `localCheckpoint()`. At extreme diameters, swap in the
-    * large-star/small-star contraction — same contract, fewer rounds. */
   /** Driver-local union-find over a PINNED (u, v) edge frame — the
     * small-graph fast path both CC forms take under
     * `spark.graft.localCcMaxEdges` (default 1M edges ≈ 32 MB of
@@ -188,8 +173,29 @@ object Dedup {
     Some(out)
   }
 
+  /** Connected components over a near-dup pair graph by iterative
+    * min-label propagation: every node's label converges to the smallest
+    * node id in its component, which IS the deterministic cluster id (and
+    * the canonical keeper for cluster-level dedup — pairs alone under-
+    * delete, since near-dup is transitive in practice but not in pairs).
+    *
+    * Each iteration is one join + one min-aggregate; the driver-side
+    * `count()` is the convergence check (standard for iterative graph
+    * algorithms — the data never leaves the cluster, only the changed-row
+    * count does). Converges in O(component diameter) iterations; dedup
+    * graphs are shallow (boilerplate stars), so a handful in practice.
+    * Per-iteration lineage is truncated via [[Iterate.pin]] — reliable
+    * `checkpoint()` when the session has a checkpoint dir, else
+    * `localCheckpoint()`. At extreme diameters, swap in the
+    * large-star/small-star contraction — same contract, fewer rounds.
+    * The jobs it runs carry the label `dedup: connected components`. */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 50): DataFrame = {
+                          maxIter: Int = 50): DataFrame =
+    graft.JobDesc(edges.sparkSession, "dedup: connected components")(
+      minLabelComponents(edges, aCol, bCol, maxIter))
+
+  private def minLabelComponents(edges: DataFrame, aCol: String, bCol: String,
+                                 maxIter: Int): DataFrame = {
     val spark = edges.sparkSession
     // materialize the RAW endpoint pairs once: the symmetric view, the
     // fast-path probe and every iteration derive from the pin, so the
@@ -243,9 +249,15 @@ object Dedup {
     *   small-star: every node links its smaller-or-equal neighbors to the
     *     minimum (hangs whole stars under their root).
     * Convergence: the edge multiset stops changing — checked on a
-    * canonical distinct edge set per round. */
+    * canonical distinct edge set per round. The jobs it runs carry the
+    * label `dedup: connected components (star)`. */
   def connectedComponentsStar(edges: DataFrame, aCol: String, bCol: String,
-                              maxIter: Int = 50): DataFrame = {
+                              maxIter: Int = 50): DataFrame =
+    graft.JobDesc(edges.sparkSession, "dedup: connected components (star)")(
+      starComponents(edges, aCol, bCol, maxIter))
+
+  private def starComponents(edges: DataFrame, aCol: String, bCol: String,
+                             maxIter: Int): DataFrame = {
     // ONE pin of the raw endpoint pairs: the node set, the fast-path
     // probe and the canonical edge set all derive from it (previously
     // allNodes and e each pinned their own evaluation of the upstream

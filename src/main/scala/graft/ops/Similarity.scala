@@ -330,11 +330,10 @@ object Similarity {
     * — (rlabel, cvec, __cnt) out of the SAME single hash aggregation
     * (one extra count per group, no extra pass): the train path derives
     * the PQ codebook's mean division from the pinned centroid frame
-    * with no second corpus aggregation and no join — the
-    * groupBy-count + broadcast join `pqCodebook(emb, cent)` paid was
-    * two cluster jobs per (re)train. Counts match pqCodebook's
-    * groupBy-count exactly (every row of the label group, null/empty
-    * embeddings included); the survivors are exactly
+    * with no second corpus aggregation and no join — a separate
+    * groupBy-count + broadcast join would cost two cluster jobs per
+    * (re)train. Counts are a groupBy-count's exactly (every row of the
+    * label group, null/empty embeddings included); the survivors are exactly
     * [[quantizedCentroids]]' (empty-sum groups filtered). Non-float
     * element widths keep the two-pass join shape. */
   def quantizedCentroidsWithCounts(emb: DataFrame): DataFrame = {
@@ -368,68 +367,87 @@ object Similarity {
   def cosineGeneric(a: Column, b: Column): Column =
     cosine(dotDComposed(a, b), dotDComposed(a, a), dotDComposed(b, b))
 
+  /** The fused whole-codebook kernels' row cap — the rebuild layout's
+    * 4096-cell cap. */
+  private val KernelRows = 4096
+
   /** Driver-collect a (rlabel, cvec) centroid/codebook frame into the
     * (ascending labels, codeword matrix) shape the fused whole-codebook
     * kernels take — the seam that turns the n·k(·m) crossJoin + explode
     * + bounded-heap ENCODE/ASSIGN plans into single narrow map-side
-    * projections (no row expansion, no exchange: at scale the corpus is
-    * never shuffled for an encode pass at all; the k-row artifact moves
-    * to the tasks once, in the task binary, like a broadcast). None —
-    * and the row plans keep serving — when the frame is outside the
-    * fused kernels' shape: non-integral labels, non-double codewords,
-    * empty, over the 4096-cell layout cap, or carrying nulls. The
-    * collect is bounded by the same broadcast-small contract every
-    * caller already imposed on these frames (they were broadcast before;
-    * a LocalRelation-pinned frame collects driver-side with no job). */
-  private[graft] def collectCodebook(cent: DataFrame)
-      : Option[(Array[Long], Array[Array[Double]])] = {
-    import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, IntegerType, LongType, ShortType}
-    // kill-switch (default on): lets operators fall back to the row
-    // plans wholesale, and lets the equivalence spec A/B the two paths.
-    // A deliberate switch-off is NOT logged below — only shape declines
-    // are, so a production layout that silently outgrew the fused
-    // kernels (e.g. a > 4096-cell retrain) is visible in the logs
-    // instead of quietly serving the slow row plans (r18 verdict #5).
-    if (!cent.sparkSession.conf.getOption("spark.graft.fusedAnn")
-      .forall(_.toBoolean)) return None
-    cent.schema("rlabel").dataType match {
-      case ByteType | ShortType | IntegerType | LongType => ()
-      case t => return declineFused(
-        s"codebook label type ${t.simpleString} is not integral")
+    * projections (no row expansion, no exchange; the k-row artifact
+    * moves to the tasks once, in the task binary, like a broadcast).
+    * Labels are taken as longs, the order the kernels rank them in, and
+    * codewords as doubles. Left(reason) when the frame is outside that
+    * shape: empty, over [[KernelRows]] rows, a label that does not
+    * survive the round trip through long (null, fractional,
+    * non-numeric, zero-padded), or null codewords or components. At
+    * most KernelRows + 1 rows reach the driver, so an oversized frame
+    * costs one bounded fetch, never a full collect (a LocalRelation-
+    * pinned frame collects driver-side with no job). */
+  private def kernelRows(cent: DataFrame)
+      : Either[String, (Array[Long], Array[Array[Double]])] = {
+    val asLong = col("rlabel").try_cast("long")
+    val rows = cent.select(asLong,
+        asLong.cast(cent.schema("rlabel").dataType) <=> col("rlabel"),
+        col("cvec").cast("array<double>"))
+      .limit(KernelRows + 1).collect()
+    if (rows.isEmpty) Left("codebook is empty")
+    else if (rows.length > KernelRows)
+      Left(s"codebook holds more than $KernelRows rows (the fused-path cap)")
+    else if (rows.exists(r => r.isNullAt(0) || !r.getBoolean(1)))
+      Left("codebook carries a label that is null or does not round-trip through long")
+    else if (rows.exists(r => r.isNullAt(2) || r.getSeq[Any](2).contains(null)))
+      Left("codebook carries null codewords or codeword components")
+    else {
+      val sorted = rows.map(r => (r.getLong(0), r.getSeq[Double](2).toArray))
+        .sortBy(_._1)
+      Right((sorted.map(_._1), sorted.map(_._2)))
     }
-    cent.schema("cvec").dataType match {
-      case ArrayType(DoubleType, _) => ()
-      case t => return declineFused(
-        s"codeword type ${t.simpleString} is not array<double>")
-    }
-    val rows = cent.select(col("rlabel").cast("long"), col("cvec")).collect()
-    if (rows.isEmpty) return declineFused("codebook is empty")
-    if (rows.length > 4096) return declineFused(
-      s"codebook holds ${rows.length} rows (> 4096 fused-path cap)")
-    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-      return declineFused("codebook carries null labels or codewords")
-    val pairs = rows.map(r => (r.getLong(0), r.getSeq[Any](1)))
-    if (pairs.exists(_._2.contains(null)))
-      return declineFused("codebook carries null codeword components")
-    val sorted = pairs.sortBy(_._1)
-    Some((sorted.map(_._1),
-      sorted.map(_._2.iterator.map(_.asInstanceOf[Double]).toArray)))
   }
+
+  /** A PQ codebook (`rlabel`, `cvec`) in the fused kernels' shape
+    * ([[kernelRows]]) — every PQ step (encode, refine, reconstruct,
+    * reconstruction cosine, scoring) runs on it, and on nothing else.
+    * A book the kernels cannot serve is refused with the reason: the
+    * [[kernelRows]] shape rules, colliding labels (a code could not name
+    * its codeword), or codewords that are not float or double arrays. */
+  private[graft] def pqKernelBook(book: DataFrame)
+      : (Array[Long], Array[Array[Double]]) = {
+    val got = book.schema("cvec").dataType match {
+      case ArrayType(FloatType | DoubleType, _) => kernelRows(book)
+      case t => Left(s"codeword type ${t.simpleString} is not an array of float or double")
+    }
+    got.filterOrElse(b => b._1.distinct.length == b._1.length,
+      "codebook labels collide") match {
+      case Right(b) => b
+      case Left(reason) => throw new IllegalArgumentException(
+        s"PQ codebook refused: $reason — the fused PQ kernels are the only PQ implementation")
+    }
+  }
+
+  /** The fused PQ kernels read float embeddings only; refuse any other
+    * element type instead of casting it lossily. */
+  private[graft] def requireFloatEmbeddings(emb: DataFrame): Unit =
+    emb.schema("embedding").dataType match {
+      case ArrayType(FloatType, _) => ()
+      case t => throw new IllegalArgumentException(
+        s"PQ: embedding type ${t.simpleString} is not array<float>, the only type the PQ kernels read")
+    }
 
   private val fusedLog = org.slf4j.LoggerFactory.getLogger(
     "graft.ops.Similarity")
 
-  /** Most recent fused-path decline reason — the testable half of the
-    * decline logging (the spec asserts the signal fires; production
-    * reads the WARN). Never set by the deliberate kill-switch. */
+  /** Most recent fused-assignment decline reason — the testable half of
+    * the decline logging (the spec asserts the signal fires; production
+    * reads the WARN). */
   private[graft] val lastFusedDecline =
     new java.util.concurrent.atomic.AtomicReference[String](null)
 
-  private def declineFused(reason: String): Option[Nothing] = {
+  private def declineFused(reason: String): Unit = {
     lastFusedDecline.set(reason)
-    fusedLog.warn(s"fused ANN kernels declined ($reason) — " +
-      "serving the row plans for this call")
-    None
+    fusedLog.warn(s"fused ANN assignment declined ($reason) — " +
+      "serving the heap assignment for this call")
   }
 
   /** Run `iters` full Lloyd iterations from the seed `label` column:
@@ -469,26 +487,28 @@ object Similarity {
     * affordable: the interpreted fold's per-row lambda overhead made
     * assignment — not the pair join — the dominant cost past k≈100. */
   def assignClusters(emb: DataFrame, cent: DataFrame, nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType}
-    // FUSED path (float embeddings × double quantized centroids — every
-    // trained geometry): one narrow map-side projection per vector via
-    // the whole-codebook kernel, no n·k crossJoin rows, no heap
-    // exchange. Row-identical to the heap plan by the kernel's
-    // replicated (Double.compare DESC, label ASC) selection with the
-    // null-score → -Inf substitution (FusedAnnSpec pins it, null
+    // FUSED path (float embeddings × double quantized centroids with
+    // integral labels — every trained geometry): one narrow map-side
+    // projection per vector via the whole-codebook kernel, no n·k
+    // crossJoin rows, no heap exchange. Same (Double.compare DESC, label
+    // ASC) selection and null-score → -Inf substitution as the heap plan
+    // (FusedAnnSpec pins both against a scalar reference, null
     // embeddings included — they still assign to the smallest labels).
-    (emb.schema("embedding").dataType, cent.schema("cvec").dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(DoubleType, _)) =>
-        collectCodebook(cent) match {
-          case Some((labels, cents)) =>
-            val rlabelType = cent.schema("rlabel").dataType
+    // The heap plan below serves string labels, float centroids and
+    // frames the kernel declines (logged: over 4096 rows, nulls).
+    val rlabelType = cent.schema("rlabel").dataType
+    (emb.schema("embedding").dataType, cent.schema("cvec").dataType, rlabelType) match {
+      case (ArrayType(FloatType, _), ArrayType(DoubleType, _),
+            ByteType | ShortType | IntegerType | LongType) =>
+        kernelRows(cent) match {
+          case Right((labels, cents)) =>
             return fanOutSmall(emb.select(col("vec_id"), col("embedding")))
               .select(col("vec_id"), col("embedding"),
                 explode(graft.functions.GraftExpressions.nearestKLabels(
                   col("embedding"), cents, labels, nprobe)).as("__cl"))
               .select(col("vec_id"), col("embedding"),
                 col("__cl").cast(rlabelType).as("cluster"))
-          case None => ()
+          case Left(reason) => declineFused(reason)
         }
       case _ => ()
     }
@@ -518,7 +538,6 @@ object Similarity {
     // through the heap and is cast back to the centroid label's own
     // type, so callers and oracles see unchanged cluster values.
     import graft.functions.GraftExpressions.topKBy
-    val rlabelType = cent.schema("rlabel").dataType
     // the heap rides LONG or STRING ids natively; a lossy silent cast
     // (e.g. a string label nulling out) would drop rows — refuse other
     // label types loudly instead
@@ -846,8 +865,8 @@ object Similarity {
   // the argmax-dot codeword per subspace with ties to the smallest
   // label; every dot is the sequential left fold. Encoding cost is
   // n·k·m subspace dots — same O(n·k) assignment shape as IVF itself —
-  // all map-side under a broadcast codebook, reduced by the bounded-heap
-  // aggregate (no n·k·m sort).
+  // all inside one fused kernel call per vector against the collected
+  // codebook ([[pqKernelBook]]): no n·k·m rows, no exchange.
   // -------------------------------------------------------------------
 
   /** PQ codebook: the quantized centroid SUMS divided by each label's
@@ -863,100 +882,29 @@ object Similarity {
     // groupBy-count + broadcast-join shape this replaces
     pqCodebookFromCounts(quantizedCentroidsWithCounts(emb))
 
-  /** [[pqCodebook]] against ALREADY-COMPUTED quantized centroid sums for
-    * the same `label` column — the train-path form: train pins
-    * [[quantizedCentroids]] for the cell table anyway, and recomputing
-    * the identical aggregation inside the codebook (as the one-arg form
-    * must, since a pinned frame is a separate execution no exchange
-    * reuse can see) pays a second full centroid pass per (re)train.
-    * Byte-identical output: the sums are the same exact integers, the
-    * mean division the same one IEEE op per component. */
-  def pqCodebook(emb: DataFrame, cent: DataFrame): DataFrame = {
-    val counts = emb.groupBy(col("label"))
-      .agg(count(lit(1)).as("__cnt"))
-      .select(col("label").as("rlabel"), col("__cnt"))
-    cent.join(broadcast(counts), "rlabel")
-      .select(col("rlabel"),
-        transform(col("cvec"), x => x / col("__cnt")).as("cvec"))
-  }
-
   /** One per-subspace Lloyd refinement of a PQ codebook — PQ's actual
     * training step (Jégou et al. §III: k-means per subspace, not one
     * k-means over full vectors). Each subvector is assigned to its
-    * nearest current codeword ([[pqEncode]]), then every codeword moves
-    * to the quantized MEAN of its assigned subvectors (integer component
-    * sums / exact count — engine-identical, same discipline as
-    * [[quantizedCentroids]]). A codeword that attracts no subvectors in
-    * some subspace keeps its previous components there, so the codebook
-    * never shrinks and ids stay stable. */
+    * nearest current codeword ([[pqEncode]]'s kernel), then every
+    * codeword moves to the quantized MEAN of its assigned subvectors
+    * (integer component sums / exact count — engine-identical, same
+    * discipline as [[quantizedCentroids]]). A codeword that attracts no
+    * subvectors in some subspace keeps its previous components there, so
+    * the codebook never shrinks and ids stay stable.
+    *
+    * ONE cluster action: the codes come from the whole-codebook kernel
+    * in the projection that slices the subvectors, and one (code, sub)
+    * aggregation of the slices via the (sum, count)-struct accumulator
+    * carries k·m per-task buffers (QuantVecSumCnt scaladoc: count = rows
+    * reaching the position, null elements included; all-null positions
+    * carry a null sum; unreached positions are absent). The means and
+    * the new codewords assemble driver-side against the collected book:
+    * mean = sum / count per reached position, a null sum or an absent
+    * position keeps the old component, positions past the old
+    * codeword's length stay null. */
   def pqRefineBook(emb: DataFrame, book: DataFrame, m: Int, dsub: Int): DataFrame = {
-    val Q = 1048576L
-    // FUSED path (see assignClusters): the per-vector codes come from
-    // the whole-codebook kernel IN the same projection that explodes
-    // the subvectors, so the encode's crossJoin rows, its heap exchange
-    // AND the codes-back-to-embedding join by vec_id (two more corpus
-    // exchanges) all disappear; the (code, sub, j) aggregation below is
-    // unchanged and sees identical input rows.
-    // FUSED path: codes from the whole-codebook kernel in the same
-    // projection, then ONE (code, sub) aggregation of the subvector
-    // slices via the (sum, count)-struct accumulator — the exchange
-    // carries k·m per-task buffers instead of n·m·dsub exploded
-    // component rows, and the per-position sums/counts are the exploded
-    // form's exactly (QuantVecSumCnt scaladoc: count = rows reaching
-    // the position, null elements included; all-null positions carry a
-    // null sum; unreached positions are absent).
-    (emb.schema("embedding").dataType, book.schema("cvec").dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(DoubleType, _)) =>
-        collectCodebook(book) match {
-          case Some((labels, books)) =>
-            // ONE cluster action: the (code, sub) slice-sum aggregation
-            // collects its k·m bounded buffers; the per-position mean
-            // map and the left join back onto the k-row book assemble
-            // DRIVER-side (the book is already collected) — replacing
-            // the exploded-position re-aggregation + broadcast-join
-            // subtree that cost 4-6 AQE stage-jobs per (re)train. The
-            // arithmetic is the row plan's exactly: mean =
-            // s.cast(double) / c per reached position with c > 0
-            // (a null sum — all-null elements — falls back to the old
-            // codeword component, as the null map entry did), absent
-            // positions keep the old component, positions past the old
-            // codeword's length stay null.
-            return pqRefineBookDriver(emb, book, labels, books, m, dsub)
-          case None => ()
-        }
-      case _ => ()
-    }
-    val refined = {
-      val codes = pqEncode(emb, book, m, dsub)
-      emb.select(col("vec_id"), col("embedding"))
-        .join(codes, "vec_id")
-        .select(col("sub"), col("code"),
-          posexplode(slice(col("embedding"), col("sub") * dsub + 1, lit(dsub)))
-            .as(Seq("j", "v")))
-        .groupBy(col("code"), col("sub"), col("j"))
-        .agg(sum(floor(col("v").cast("double") * Q).cast("long")).as("__s"),
-          count(lit(1)).as("__c"))
-        .groupBy(col("code"))
-        .agg(map_from_entries(collect_list(struct(
-          (col("sub") * dsub + col("j")).as("i"),
-          (col("__s").cast("double") / col("__c")).as("v")))).as("__mv"))
-    }
-    book.join(broadcast(refined), book("rlabel") === refined("code"), "left")
-      .select(col("rlabel"),
-        transform(sequence(lit(0), lit(m * dsub - 1)), i =>
-          coalesce(element_at(col("__mv"), i),
-            element_at(col("cvec"), i + 1))).as("cvec"))
-  }
-
-  /** The fused [[pqRefineBook]] tail: one distributed slice-sum
-    * aggregation, then driver-side assembly against the collected book.
-    * Bit-identical to the join plan (PackedCodesSpec/FusedAnnSpec A/B):
-    * same integer sums, same one-IEEE-op means, same fallback to the
-    * old component for absent/all-null positions. */
-  private def pqRefineBookDriver(emb: DataFrame, book: DataFrame,
-                                 labels: Array[Long],
-                                 books: Array[Array[Double]],
-                                 m: Int, dsub: Int): DataFrame = {
+    requireFloatEmbeddings(emb)
+    val (labels, books) = pqKernelBook(book)
     val aggRows = fanOutSmall(emb.select(col("vec_id"), col("embedding")))
       .select(col("embedding"),
         posexplode(graft.functions.GraftExpressions.pqCodesAll(
@@ -967,10 +915,9 @@ object Similarity {
         slice(col("embedding"), col("sub") * dsub + 1, lit(dsub)))
         .as("__sc"))
       .collect()
-    // code -> (position -> mean); a position with count 0 never appears
-    // (the filter), a reached position whose sum is null (all elements
-    // null) maps to null — both land on the old component below,
-    // exactly like the join plan's null map entries
+    // code -> (position -> mean); a position with count 0 never appears,
+    // a reached position whose sum is null (all elements null) maps to
+    // null — both keep the old component below
     val means = new java.util.HashMap[Long, java.util.HashMap[Int, java.lang.Double]]()
     aggRows.foreach { r =>
       if (!r.isNullAt(0) && !r.isNullAt(2)) {
@@ -991,132 +938,58 @@ object Similarity {
         }
       }
     }
-    val bookRows = book.select(col("rlabel"), col("cvec")).collect()
-    val out = bookRows.map { r =>
-      val rl = r.get(0)
-      val cv = r.getSeq[Any](1)
-      val mp = means.get(r.getAs[Number](0).longValue())
+    val out = labels.indices.map { b =>
+      val cv = books(b)
+      val mp = means.get(labels(b))
       val cvec: Seq[Any] = (0 until m * dsub).map { i =>
-        val refinedV = if (mp != null && mp.containsKey(i)) mp.get(i) else null
+        val refinedV = if (mp != null) mp.get(i) else null
         if (refinedV != null) refinedV
         else if (i < cv.length) cv(i)
         else null
       }
-      org.apache.spark.sql.Row(rl, cvec)
+      org.apache.spark.sql.Row(labels(b), cvec)
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      book.schema("rlabel"),
-      org.apache.spark.sql.types.StructField("cvec",
-        ArrayType(DoubleType, containsNull = true))))
-    book.sparkSession.createDataFrame(
-      java.util.Arrays.asList(out.toSeq: _*), schema)
+    // labels round-trip through long (pqKernelBook), so the cast back
+    // restores the book's own label values
+    book.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*),
+      StructType(Seq(StructField("rlabel", LongType),
+        StructField("cvec", ArrayType(DoubleType, containsNull = true)))))
+      .select(col("rlabel").cast(book.schema("rlabel").dataType).as("rlabel"),
+        col("cvec"))
   }
 
   /** Encode each vector as m codebook labels: (vec_id, sub, code) with
-    * sub in [0, m). `cent` is the [[pqCodebook]] frame; the subspace
+    * sub in [0, m) — [[pqEncodePacked]]'s codes, one row per subspace. */
+  def pqEncode(emb: DataFrame, cent: DataFrame, m: Int, dsub: Int): DataFrame =
+    pqEncodePacked(emb, cent, m, dsub)
+      .select(col("vec_id"), posexplode(col("codes")).as(Seq("sub", "code")))
+
+  /** Encode each vector as ONE (vec_id, codes) row, codes[i] =
+    * subquantizer i's label — the index row shape the persisted codes
+    * table stores. `cent` is the [[pqCodebook]] frame; the subspace
     * codebook for sub s is cvec[s*dsub ..< (s+1)*dsub]. Selection is by
     * subspace COSINE (not raw dot — dot would bias toward large-norm
-    * codewords), argmax with ties to the smallest label. */
-  def pqEncode(emb: DataFrame, cent: DataFrame, m: Int, dsub: Int): DataFrame = {
-    import graft.functions.GraftExpressions.topKBy
-    import graft.functions.TextFunctions.{cosine, dotDComposed}
-    // FUSED path (see assignClusters): all m argmax-subspace-cosine
-    // codes in one kernel call per vector — the n·k·m crossJoin rows
-    // and the (vec_id, sub) heap exchange disappear; output rows are
-    // identical (posexplode yields the same (sub, code) pairs).
-    (emb.schema("embedding").dataType, cent.schema("cvec").dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(DoubleType, _)) =>
-        collectCodebook(cent) match {
-          case Some((labels, books)) =>
-            val rlt = cent.schema("rlabel").dataType
-            return fanOutSmall(emb.select(col("vec_id"), col("embedding")))
-              .select(col("vec_id"),
-                posexplode(graft.functions.GraftExpressions.pqCodesAll(
-                  col("embedding"), books, labels, m, dsub))
-                  .as(Seq("sub", "code")))
-              .select(col("vec_id"), col("sub"),
-                col("code").cast(rlt).as("code"))
-          case None => ()
-        }
-      case _ => ()
-    }
-    val rlabelType = cent.schema("rlabel").dataType
-    // subspace scoring: the fused single-pass codegen kernel where the
-    // shapes allow (float embeddings vs double codewords — every trained
-    // book), the interpreted slice/zip_with/aggregate composition for any
-    // other width. Bit-identical by SubCosineSpec, edge cases included —
-    // the composed form walked 5 freshly allocated arrays through 3
-    // interpreted folds per (vector, subspace, codeword) row and was the
-    // dominant cost of every corpus encode pass.
-    val score0 = (emb.schema("embedding").dataType, cent.schema("cvec").dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(DoubleType, _)) =>
-        graft.functions.GraftExpressions.subCosineFD(
-          col("embedding"), col("cvec"), col("sub"), dsub)
-      case _ =>
-        val off = col("sub") * dsub + 1
-        val sa = slice(col("embedding"), off, lit(dsub))
-        val sb = slice(col("cvec"), off, lit(dsub))
-        cosine(dotDComposed(sa, sb), dotDComposed(sa, sa), dotDComposed(sb, sb))
-    }
-    val score = coalesce(score0, lit(Double.NegativeInfinity))
-    fanOutSmall(emb.select(col("vec_id"), col("embedding")))
-      .crossJoin(broadcast(cent))
-      .select(col("vec_id"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"),
-        col("rlabel").cast("long").as("__rl"), col("embedding"), col("cvec"))
-      .select(col("vec_id"), col("sub"), col("__rl"), score.as("__cos"))
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(topKBy(col("__cos"), col("__rl"), 1).as("__top"))
-      .select(col("vec_id"), col("sub"),
-        element_at(col("__top"), 1).getField("id").cast(rlabelType).as("code"))
-  }
-
-  /** [[pqEncode]] in the PACKED row shape: ONE (vec_id, codes) row per
-    * vector, codes[i] = subquantizer i's label — the index row shape the
-    * persisted codes table stores (m× fewer rows than the exploded
-    * (vec_id, sub, code) form; guide §2.3 shuffle fewer bytes / §6 I/O).
-    * Values are exactly [[pqEncode]]'s: the fused path drops the
-    * posexplode the row form adds; the fallback groups the row form's
-    * output back up ((sub, code) pairs sorted by sub — subs are unique
-    * per vector, so the packing is a bijection). */
+    * codewords), argmax with ties to the smallest label, a null window
+    * scoring -Inf; all m codes come out of one fused kernel call per
+    * vector. */
   def pqEncodePacked(emb: DataFrame, cent: DataFrame, m: Int, dsub: Int): DataFrame = {
-    (emb.schema("embedding").dataType, cent.schema("cvec").dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(DoubleType, _)) =>
-        collectCodebook(cent) match {
-          case Some((labels, books)) =>
-            val rlt = cent.schema("rlabel").dataType
-            return fanOutSmall(emb.select(col("vec_id"), col("embedding")))
-              .select(col("vec_id"),
-                graft.functions.GraftExpressions.pqCodesAll(
-                  col("embedding"), books, labels, m, dsub)
-                  .cast(ArrayType(rlt)).as("codes"))
-          case None => ()
-        }
-      case _ => ()
-    }
-    packCodeRows(pqEncode(emb, cent, m, dsub))
+    val codes = pqCodes(emb, cent, m, dsub)
+    fanOutSmall(emb.select(col("vec_id"), col("embedding")))
+      .select(col("vec_id"), codes.as("codes"))
   }
 
-  /** Pack an exploded (vec_id, sub, code) frame into (vec_id, codes) —
-    * the fallback seam of [[pqEncodePacked]] and the A/B twin the packed
-    * spec pins: codes ride in ascending-sub order, so element i is
-    * subquantizer i's code whenever subs are the dense 0..m−1 the
-    * encoders emit. */
-  private[graft] def packCodeRows(rows: DataFrame): DataFrame =
-    rows.groupBy(col("vec_id"))
-      .agg(transform(array_sort(collect_list(struct(col("sub"), col("code")))),
-        x => x.getField("code")).as("codes"))
+  /** The packed codes column of `embedding` under `book`, cast to the
+    * book's label type. Resolves (and so refuses) the book when called. */
+  private[graft] def pqCodes(emb: DataFrame, book: DataFrame, m: Int,
+                             dsub: Int): Column = {
+    requireFloatEmbeddings(emb)
+    pqCodesOf(pqKernelBook(book), book.schema("rlabel").dataType, m, dsub)
+  }
 
-  /** Reconstruct the quantized vector from its codes: (vec_id, xhat)
-    * where xhat is the concatenation of the m chosen codewords. */
-  def pqReconstruct(codes: DataFrame, cent: DataFrame, dsub: Int): DataFrame =
-    codes.join(broadcast(cent), codes("code") === cent("rlabel"))
-      .select(col("vec_id"), col("sub"),
-        slice(col("cvec"), col("sub") * dsub + 1, lit(dsub)).as("__piece"))
-      .groupBy(col("vec_id"))
-      .agg(flatten(transform(
-        array_sort(collect_list(struct(col("sub"), col("__piece")))),
-        x => x.getField("__piece"))).as("xhat"))
+  private def pqCodesOf(kb: (Array[Long], Array[Array[Double]]),
+                        labelType: DataType, m: Int, dsub: Int): Column =
+    graft.functions.GraftExpressions.pqCodesAll(
+      col("embedding"), kb._2, kb._1, m, dsub).cast(ArrayType(labelType))
 
   /** IVF-PQ top-k: queries probe their IVF cluster (both sides from
     * [[assignClusters]]) but candidates are scored against their PQ
@@ -1125,34 +998,37 @@ object Similarity {
     * Returns (qid, nid, cluster, cos_pq, rank). Corpus side must be the
     * nprobe=1 assignment (one home cluster per stored vector — standard
     * IVF indexing); multiprobe belongs on the QUERY side, where a
-    * multi-assigned query just probes more cells. */
+    * multi-assigned query just probes more cells. The codes column rides
+    * the assignment frame as ONE map-side projection (the corpus already
+    * carries its home cell), so there is no assign⋈encode join. */
   def ivfPqTopK(corpusAssigned: DataFrame, queryAssigned: DataFrame,
                 book: DataFrame, m: Int, dsub: Int, k: Int): DataFrame = {
-    // FUSED path: the codes column rides the assignment frame as ONE
-    // map-side projection (the corpus already carries its home cell from
-    // assignClusters) — the assign⋈encode equi-join by vec_id the row
-    // shape paid disappears. Row-identical: both join sides held every
-    // vec_id, and pqCodesAll replicates the heap selection bit-for-bit.
-    (corpusAssigned.schema("embedding").dataType, book.schema("cvec").dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(DoubleType, _)) =>
-        collectCodebook(book) match {
-          case fused @ Some((labels, books)) =>
-            val rlt = book.schema("rlabel").dataType
-            return ivfPqTopKIndexed(
-              corpusAssigned.select(col("vec_id"), col("cluster"),
-                graft.functions.GraftExpressions.pqCodesAll(
-                  col("embedding"), books, labels, m, dsub)
-                  .cast(ArrayType(rlt)).as("codes")),
-              queryAssigned, book, fused, dsub, k)
-          case None => ()
-        }
-      case _ => ()
-    }
+    requireFloatEmbeddings(corpusAssigned)
+    val kb = pqKernelBook(book)
     ivfPqTopKIndexed(
-      corpusAssigned.select(col("vec_id"), col("cluster")).join(
-        pqEncode(corpusAssigned.select(col("vec_id"), col("embedding")),
-          book, m, dsub), Seq("vec_id")),
-      queryAssigned, book, dsub, k)
+      corpusAssigned.select(col("vec_id"), col("cluster"),
+        pqCodesOf(kb, book.schema("rlabel").dataType, m, dsub).as("codes")),
+      queryAssigned, kb, dsub, k)
+  }
+
+  /** Refuse a codes table that is not in the packed (vec_id, cluster,
+    * codes) layout. The exploded (vec_id, cluster, sub, code) layout —
+    * m rows per vector, written before the index was packed — gets an
+    * [[UnpackedCodesException]] naming the migration:
+    * `CALL graft.system.ann_rebuild` re-encodes the corpus into the
+    * packed layout. */
+  private[graft] def requirePackedCodes(codes: DataFrame, who: String,
+                                        table: String): Unit = {
+    val cols = codes.columns
+    if (Seq("sub", "code").forall(cols.contains) && !cols.contains("codes"))
+      throw new UnpackedCodesException(
+        s"$who: the codes table $table is in the exploded (vec_id, cluster, " +
+          "sub, code) layout, which is no longer served; re-encode it into " +
+          "the packed (vec_id, cluster, codes) layout with CALL " +
+          "graft.system.ann_rebuild(corpus_table, model_table, codes_table)")
+    require(Seq("vec_id", "cluster", "codes").forall(cols.contains),
+      s"$who: the codes table $table is not an IVF-PQ codes table (needs " +
+        s"vec_id, cluster and codes; has ${cols.mkString(",")})")
   }
 
   /** [[ivfPqTopK]] against a PREBUILT codes frame — the persisted-index
@@ -1162,18 +1038,13 @@ object Similarity {
     * frozen book and append — see `Streams.versionedAnnIndexSink`) and
     * searchable at 100 TB where the raw vectors don't fit anywhere.
     *
-    * TWO accepted codes shapes, detected by schema:
-    *   - PACKED (vec_id, cluster, codes) — one row per vector, codes[i]
-    *     = subquantizer i's label (what [[graft.ops.AnnIndex]] builds
-    *     and the maintenance sink appends): reconstruction is a narrow
-    *     MAP-SIDE projection per candidate (the fused
-    *     [[graft.functions.Kernels.pqReconstructK]] lookup against the
-    *     collected book), evaluated once per candidate.
-    *   - exploded (vec_id, cluster, sub, code) — m rows per vector (the
-    *     pre-packing table layout, still served for compatibility):
-    *     codes⋈book join + (nid, cluster) groupBy, as before.
-    * Rows out are identical across the shapes (PackedCodesSpec A/Bs
-    * them, the oracle pins the packed path end to end).
+    * `codes` is PACKED (vec_id, cluster, codes) — one row per vector,
+    * codes[i] = subquantizer i's label, what [[graft.ops.AnnIndex]]
+    * builds and the maintenance sink appends (an exploded frame is
+    * refused, see [[requirePackedCodes]]). Reconstruction is a narrow
+    * MAP-SIDE projection per candidate (the fused
+    * [[graft.functions.Kernels.pqReconstructK]] lookup against the
+    * collected book), evaluated once per candidate.
     *
     * TWO query-side shapes, detected by plan:
     *   - HELD on the driver — `queryAssigned` optimizes to a local
@@ -1194,29 +1065,28 @@ object Similarity {
     * A/Bs the two shapes). */
   def ivfPqTopKIndexed(codes: DataFrame, queryAssigned: DataFrame,
                        book: DataFrame, dsub: Int, k: Int): DataFrame =
-    ivfPqTopKIndexed(codes, queryAssigned, book,
-      if (codes.columns.contains("codes")) collectCodebook(book) else None,
-      dsub, k)
+    ivfPqTopKIndexed(codes, queryAssigned, pqKernelBook(book), dsub, k)
 
-  /** [[ivfPqTopKIndexed]] with `book`'s [[collectCodebook]] result
-    * already resolved (`fused`; None serves the row-plan reconstruction)
-    * — the prepared handle resolves it once, at prepare. */
+  /** [[ivfPqTopKIndexed]] with `book` already resolved by
+    * [[pqKernelBook]] — the prepared handle resolves it once, at
+    * prepare. */
   private[graft] def ivfPqTopKIndexed(
-      codes: DataFrame, queryAssigned: DataFrame, book: DataFrame,
-      fused: Option[(Array[Long], Array[Array[Double]])], dsub: Int,
+      codes: DataFrame, queryAssigned: DataFrame,
+      kb: (Array[Long], Array[Array[Double]]), dsub: Int,
       k: Int): DataFrame = {
+    requirePackedCodes(codes, "ivfPqTopKIndexed", "passed in")
     val pairs = heldQueries(queryAssigned, codes.schema("cluster").dataType) match {
       case Some(cellQueries) =>
         // the cell filter is the semi join's row-exact equivalent, and
         // runs before reconstruction so an unprobed row costs one lookup
-        reconstructed(codes.filter(cellQueries.isNotNull), book, fused, dsub)
+        reconstructed(codes.filter(cellQueries.isNotNull), kb, dsub)
           .select(col("nid"), col("cluster"), col("xhat"), inline(cellQueries))
       case None =>
         val q = queryAssigned.select(col("vec_id").as("qid"),
           col("embedding").as("qvec"), col("cluster"))
         val probed = q.select(col("cluster")).distinct()
         reconstructed(codes.join(broadcast(probed), Seq("cluster"), "left_semi"),
-          book, fused, dsub)
+          kb, dsub)
           .join(broadcast(q), Seq("cluster"))
     }
     // final rank via the MIXED-direction bounded heap, not a window: the
@@ -1261,42 +1131,24 @@ object Similarity {
       case _ => None
     }
 
-  /** The candidates' reconstructions (nid, cluster, xhat). PACKED codes
-    * reconstruct map-side when the book collected with distinct labels
-    * (the join's duplicate-label row multiplication has no lookup
-    * equivalent); otherwise they explode back to the row shape for the
-    * join plan. A vector none of whose codes hit the book yields no row,
-    * as in the inner join — dropped by a generator rather than a filter,
+  /** The candidates' reconstructions (nid, cluster, xhat), map-side
+    * through the book's lookup kernel. A code absent from the book
+    * contributes no piece, and a vector none of whose codes hit the book
+    * yields no row — dropped by a generator rather than a filter,
     * because Catalyst pushes a filter on the alias below this projection
     * and would evaluate the reconstruction a second time there. */
-  private def reconstructed(cand: DataFrame, book: DataFrame,
-                            fused: Option[(Array[Long], Array[Array[Double]])],
+  private def reconstructed(cand: DataFrame,
+                            kb: (Array[Long], Array[Array[Double]]),
                             dsub: Int): DataFrame =
-    if (cand.columns.contains("codes")) fused match {
-      case Some((labels, books)) if labels.length == labels.distinct.length =>
-        cand.select(col("vec_id").as("nid"), col("cluster"),
-          graft.functions.GraftExpressions.pqReconstructK(
-            col("codes").cast("array<long>"), books, labels, dsub).as("__x"))
-          .select(col("nid"), col("cluster"),
-            explode(when(col("__x").isNotNull, array(col("__x")))).as("xhat"))
-      case _ =>
-        reconstructRows(cand.select(col("vec_id"), col("cluster"),
-          posexplode(col("codes")).as(Seq("sub", "code"))), book, dsub)
-    } else reconstructRows(cand, book, dsub)
-
-  /** The exploded-shape reconstruction: the home cell rides INSIDE the
-    * reconstruction groupBy (a vector's cluster is constant across its m
-    * code rows, so grouping by (nid, cluster) groups exactly by nid) —
-    * one exchange on the candidate codes. Serves the compatibility row
-    * shape and the packed shape's non-collectible-book fallback. */
-  private def reconstructRows(cand: DataFrame, book: DataFrame,
-                              dsub: Int): DataFrame =
-    cand
-      .join(broadcast(book), cand("code") === book("rlabel"))
-      .select(col("vec_id").as("nid"), col("cluster"), col("sub"),
-        slice(col("cvec"), col("sub") * dsub + 1, lit(dsub)).as("__piece"))
-      .groupBy(col("nid"), col("cluster"))
-      .agg(flatten(transform(
-        array_sort(collect_list(struct(col("sub"), col("__piece")))),
-        x => x.getField("__piece"))).as("xhat"))
+    cand.select(col("vec_id").as("nid"), col("cluster"),
+      graft.functions.GraftExpressions.pqReconstructK(
+        col("codes").cast("array<long>"), kb._2, kb._1, dsub).as("__x"))
+      .select(col("nid"), col("cluster"),
+        explode(when(col("__x").isNotNull, array(col("__x")))).as("xhat"))
 }
+
+/** An IVF-PQ codes table in the exploded (vec_id, cluster, sub, code)
+  * layout, which no search or maintenance path serves any more; the
+  * message names the migration (`CALL graft.system.ann_rebuild`). */
+class UnpackedCodesException(message: String)
+  extends IllegalStateException(message)

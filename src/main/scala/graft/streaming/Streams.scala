@@ -458,8 +458,7 @@ object Streams {
         if (!alreadyCommitted(spark, root, checkpointDir, kind, id)) {
           // exact duplicate rows collapse; conflicting rows under one id
           // would otherwise append duplicate index rows (for PQ codes,
-          // pqReconstruct's per-vector collect would silently assemble a
-          // double-length reconstruction) — refuse before writing
+          // two candidates under one vec_id) — refuse before writing
           // anything. Pinned: three consumers below (dup guard, id
           // collect, encode) would otherwise each re-shuffle the distinct
           val b0 = batch.toDF().distinct().localCheckpoint()

@@ -476,7 +476,7 @@ class AnnPreparedSpec extends SparkSpecBase {
     // re-implementation would silently diverge from the heap
     // labels are NUMERIC STRINGS: the model table unions cell labels and
     // PQ-book labels into one rlabel column, so the two label columns
-    // must share a type (and pqEncode's heap rides book labels as longs)
+    // must share a type (and the PQ kernels take book labels as longs)
     def vec(i: Int): Seq[Float] =
       (0 until 16).map(j => 0.5f + 0.01f * ((i * 13 + j * 7) % 11))
     val rows =

@@ -154,15 +154,19 @@ class AnnSearchPlanSpec extends SparkSpecBase {
     assert(got.toSet == viaBroadcast.collect().toSet)
   }
 
-  test("the codebook resolves at prepare: a spark.graft.fusedAnn change applies from the next prepare") {
-    val fused = AnnIndex.prepare(spark, modelRoot, codesRoot)
-    spark.conf.set("spark.graft.fusedAnn", "false")
-    try {
-      val stillFused = fused.search(queries(7), k = 10, nprobe = 2)
-      assert(reconstructs(stillFused) == 1)
-      val rowPlan = AnnIndex.prepare(spark, modelRoot, codesRoot).search(queries(7), k = 10, nprobe = 2)
-      assert(reconstructs(rowPlan) == 0)
-      assert(rowPlan.collect().toSet == stillFused.collect().toSet)
-    } finally spark.conf.unset("spark.graft.fusedAnn")
+  test("the codebook resolves at prepare: a handle keeps serving its book after a retrain") {
+    val m = tmp("ann_plan_rm"); val c = tmp("ann_plan_rc")
+    AnnIndex.trainAndRebuild(spark, emb.filter(col("vec_id") < 2000), m = 8, dsub = 4, m, c)
+    val handle = AnnIndex.prepare(spark, m, c)
+    val before = handle.search(queries(7), k = 10, nprobe = 2)
+    assert(reconstructs(before) == 1)
+    val want = before.collect().toSet
+    // a new model over other vectors replaces centroids and book; the
+    // packed codes table is untouched
+    AnnIndex.train(spark, emb.filter(col("vec_id") >= 2000), m = 8, dsub = 4, m)
+    val after = handle.search(queries(7), k = 10, nprobe = 2)
+    assert(reconstructs(after) == 1 && after.collect().toSet == want && want.size == 160)
+    assert(AnnIndex.prepare(spark, m, c).search(queries(7), k = 10, nprobe = 2)
+      .collect().toSet != want)
   }
 }

@@ -125,6 +125,29 @@ class DedupSpec extends SparkSpecBase {
       30L -> 30L, 31L -> 30L, 32L -> 30L, 33L -> 30L, 34L -> 30L, 35L -> 30L))
   }
 
+  test("connected components label every job they run; span removal and the gate build lazily") {
+    import org.apache.spark.graftx.JobCount
+    val edges = Seq((2L, 1L), (2L, 3L), (10L, 11L), (11L, 12L)).toDF("d1", "d2")
+    def labels(body: => Any): Seq[String] = JobCount.labels(spark)(body)._2
+    val local = labels(Dedup.connectedComponents(edges, "d1", "d2").collect())
+    val star = labels(Dedup.connectedComponentsStar(edges, "d1", "d2").collect())
+    // the distributed rounds: every job the call itself runs is labelled
+    spark.conf.set("spark.graft.localCcMaxEdges", "0")
+    val rounds = try labels(Dedup.connectedComponents(edges, "d1", "d2"))
+      finally spark.conf.unset("spark.graft.localCcMaxEdges")
+    for ((got, want) <- Seq((local, "dedup: connected components"),
+        (star, "dedup: connected components (star)"),
+        (rounds, "dedup: connected components")))
+      assert(got.nonEmpty && got.forall(_ == want), s"$want: $got")
+    // span removal and the quality gate only build plans: their jobs
+    // belong to the caller's action, which labels them
+    val docs = Seq((1L, "<p>a b c d e</p>"), (2L, "x a b c d y")).toDF("doc_id", "raw")
+    assert(labels(Dedup.removeDuplicateSpans(docs, col("raw"), col("doc_id"), w = 3)).isEmpty)
+    assert(labels(docs.select(graft.ops.TextAnalysis.htmlToText(col("raw")).as("text"))
+      .filter(graft.ops.TextAnalysis.gopherPass(col("text"),
+        graft.functions.TextFunctions.tokens(col("text"))))).isEmpty)
+  }
+
   test("CC fixpoints under a reliable checkpoint dir: same labels, files recoverable") {
     // with sc.setCheckpointDir set, pin() switches from localCheckpoint to
     // reliable checkpoint() — an executor lost mid-fixpoint at cluster

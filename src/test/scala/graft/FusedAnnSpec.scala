@@ -3,17 +3,17 @@ package graft
 import graft.ops.{AnnIndex, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** Row-identity of the fused whole-codebook kernels (nearestKLabels /
-  * pqCodesAll / pqReconCosQ — one map-side projection per vector)
-  * against the crossJoin + explode + bounded-heap row plans they
-  * replace, A/B'd through the `spark.graft.fusedAnn` kill-switch on the
-  * same inputs: randomized embeddings plus the edge rows the heap
-  * semantics pin — a NULL embedding (must still assign/encode, to the
-  * smallest labels), a zero vector (NaN cosine ranks GREATEST under
-  * Double.compare), and duplicated centroids (equal scores break to the
-  * smallest label). */
+/** The fused whole-codebook kernels (nearestKLabels / pqCodesAll /
+  * pqReconCosQ — one map-side projection per vector) on randomized
+  * embeddings plus the edge rows the selection semantics pin — a NULL
+  * embedding (must still assign/encode, to the smallest labels), a zero
+  * vector (NaN cosine ranks GREATEST under Double.compare), and
+  * duplicated centroids (equal scores break to the smallest label).
+  * Assignment keeps two forms, so the fused one is checked against the
+  * heap plan (reached through zero-padded string labels, whose UTF8
+  * order is the numeric order); every PQ step has one implementation,
+  * checked against the scalar [[PqReference]]. */
 class FusedAnnSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -32,26 +32,28 @@ class FusedAnnSpec extends SparkSpecBase {
         col("label"))
   }
 
-  private def withFused[A](on: Boolean)(body: => A): A = {
-    spark.conf.set("spark.graft.fusedAnn", on.toString)
-    try body finally spark.conf.unset("spark.graft.fusedAnn")
-  }
-
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
+
+  /** The same centroids under zero-padded string labels: the heap plan. */
+  private def heapLabels(cent: DataFrame): DataFrame =
+    cent.select(lpad(col("rlabel").cast("string"), 5, "0").as("rlabel"), col("cvec"))
+
+  private def book(emb: DataFrame): DataFrame = Similarity.pqCodebook(
+    emb.select(col("label"), col("embedding"))
+      .withColumn("vec_id", monotonically_increasing_id()))
 
   test("fused assignClusters matches the heap plan at nprobe 1 and 2") {
     val emb = embFixture()
     val cent = Similarity.quantizedCentroids(
       emb.select(col("label"), col("embedding")))
     for (nprobe <- Seq(1, 2)) {
-      val fused = withFused(on = true)(
-        sortedRows(Similarity.assignClusters(
-          emb.select(col("vec_id"), col("embedding")), cent, nprobe)))
-      val rowPlan = withFused(on = false)(
-        sortedRows(Similarity.assignClusters(
-          emb.select(col("vec_id"), col("embedding")), cent, nprobe)))
-      assert(fused == rowPlan, s"assignClusters diverged at nprobe=$nprobe")
+      val fused = sortedRows(Similarity.assignClusters(
+        emb.select(col("vec_id"), col("embedding")), cent, nprobe))
+      val heap = sortedRows(Similarity.assignClusters(
+        emb.select(col("vec_id"), col("embedding")), heapLabels(cent), nprobe)
+        .select(col("vec_id"), col("embedding"), col("cluster").cast("int")))
+      assert(fused == heap, s"assignClusters diverged at nprobe=$nprobe")
       assert(fused.nonEmpty)
     }
   }
@@ -61,10 +63,9 @@ class FusedAnnSpec extends SparkSpecBase {
     val cent = Similarity.quantizedCentroids(
       emb.select(col("label"), col("embedding")))
     val minLabel = cent.agg(min(col("rlabel"))).head().get(0)
-    val assigned = withFused(on = true)(
-      Similarity.assignClusters(
-        emb.select(col("vec_id"), col("embedding")), cent, 1)
-        .filter(col("vec_id") === 200L).collect())
+    val assigned = Similarity.assignClusters(
+      emb.select(col("vec_id"), col("embedding")), cent, 1)
+      .filter(col("vec_id") === 200L).collect()
     assert(assigned.length == 1)
     assert(assigned.head.get(2) == minLabel)
   }
@@ -72,61 +73,55 @@ class FusedAnnSpec extends SparkSpecBase {
   test("fused assignClusters breaks duplicate-centroid ties to the smallest label") {
     val emb = embFixture().filter(col("vec_id") < 50)
     // two identical centroids under different labels: every vector
-    // scores them equally, so label 7 must never win over label 3
+    // scores them equally, so label 7 must never win over label 3 — in
+    // the fused form and in the heap plan
     val v = Seq.fill(dim)(1.0)
     val cent = Seq((3L, v), (7L, v)).toDF("rlabel", "cvec")
-    for (on <- Seq(true, false)) {
-      val got = withFused(on)(
-        Similarity.assignClusters(
-          emb.select(col("vec_id"), col("embedding")), cent, 1).collect())
-      assert(got.forall(_.getLong(2) == 3L), s"fused=$on")
+    for (c <- Seq(cent, heapLabels(cent))) {
+      val got = Similarity.assignClusters(
+        emb.select(col("vec_id"), col("embedding")), c, 1).collect()
+      assert(got.length == 50 && got.forall(_.get(2).toString.toLong == 3L),
+        c.schema.simpleString)
     }
   }
 
-  test("fused pqEncode matches the heap plan (nulls and zero vectors included)") {
+  test("pqEncode matches the scalar reference (nulls and zero vectors included)") {
     val emb = embFixture()
-    val book = Similarity.pqCodebook(
-      emb.select(col("label"), col("embedding"))
-        .withColumn("vec_id", monotonically_increasing_id()))
+    val b = book(emb)
     val m = 4; val dsub = 2
-    val fused = withFused(on = true)(
-      sortedRows(Similarity.pqEncode(
-        emb.select(col("vec_id"), col("embedding")), book, m, dsub)))
-    val rowPlan = withFused(on = false)(
-      sortedRows(Similarity.pqEncode(
-        emb.select(col("vec_id"), col("embedding")), book, m, dsub)))
-    assert(fused == rowPlan)
-    assert(fused.size == 202 * m)
+    val ref = PqReference.book(b)
+    val want = emb.collect().flatMap { r =>
+      PqReference.codes(PqReference.emb(r, 1), ref, m, dsub).zipWithIndex
+        .map { case (c, s) => (r.getLong(0), s, c) }
+    }.toSet
+    val got = Similarity.pqEncode(emb.select(col("vec_id"), col("embedding")), b, m, dsub)
+      .select(col("vec_id"), col("sub"), col("code").cast("long"))
+      .as[(Long, Int, Long)].collect()
+    assert(got.length == 202 * m && got.toSet == want)
   }
 
-  test("fused pqRefineBook matches the join plan") {
+  test("pqRefineBook matches the scalar reference") {
     val emb = embFixture()
-    val book0 = Similarity.pqCodebook(
-      emb.select(col("label"), col("embedding"))
-        .withColumn("vec_id", monotonically_increasing_id()))
+    val book0 = book(emb)
     val m = 4; val dsub = 2
-    val fused = withFused(on = true)(
-      sortedRows(Similarity.pqRefineBook(emb, book0, m, dsub)))
-    val rowPlan = withFused(on = false)(
-      sortedRows(Similarity.pqRefineBook(emb, book0, m, dsub)))
-    assert(fused == rowPlan)
+    val want = PqReference.refine(emb.collect().map(PqReference.emb(_, 1)).toSeq,
+      PqReference.book(book0), m, dsub).toMap
+    val got = Similarity.pqRefineBook(emb, book0, m, dsub).collect()
+      .map(r => r.getInt(0).toLong -> r.getSeq[Any](1)).toMap
+    assert(got == want && got.size == 5)
   }
 
-  test("fused train + driftStats matches the row-plan lifecycle bit for bit") {
+  test("train + driftStats match the scalar reference bit for bit") {
     val emb = embFixture()
-    def run(on: Boolean, tag: String): Seq[String] = withFused(on) {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), s"fusedann_model_$tag").getAbsolutePath
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete()
-      }
-      rm(new java.io.File(root))
-      AnnIndex.train(spark, emb, m = 4, dsub = 2, root)
-      sortedRows(AnnIndex.driftStats(spark, emb, root))
-    }
-    val fused = run(on = true, "on")
-    val rowPlan = run(on = false, "off")
-    assert(fused == rowPlan)
-    assert(fused.nonEmpty)
+    val root = java.nio.file.Files.createTempDirectory("fusedann_model").toString
+    AnnIndex.train(spark, emb, m = 4, dsub = 2, root)
+    val (_, modelBook, _, _) = AnnIndex.model(spark, root)
+    val ref = PqReference.book(modelBook)
+    val qcos = emb.collect().toSeq.flatMap(r =>
+      PqReference.reconCosQ(PqReference.emb(r, 1), ref, 4, 2))
+    val want = PqReference.positionQuantiles(qcos, Seq(50, 90, 99))
+    val got = AnnIndex.driftStats(spark, emb, root).collect()
+      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    assert(got == want.map { case (p, q) => p -> ((q, q, 0L)) })
   }
 }

@@ -112,7 +112,10 @@ class KernelSpec extends SparkSpecBase {
   }
 
   test("fused subspace cosine == composed slice/zip_with/aggregate form (PQ encode shape)") {
-    import graft.functions.GraftExpressions.subCosineFD
+    // the subspace cosine runs inside the pqCodesAll encode kernel; its
+    // codes must be the argmax (ties to the smallest label, null -> -Inf)
+    // of the composed slice/zip_with/aggregate cosine, the heap selection
+    import graft.functions.GraftExpressions.{pqCodesAll, topKBy}
     val dsub = 4
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val book = graft.ops.Similarity.pqCodebook(
@@ -131,17 +134,23 @@ class KernelSpec extends SparkSpecBase {
       .select(col("vec_id"), col("embedding").cast("array<float>"), col("label"))
     val shapes = emb.select(col("vec_id"), col("embedding"), col("label"))
       .unionByName(edges)
-    val pairs = shapes.crossJoin(book)
-      .select(col("vec_id"), col("rlabel"), col("embedding"), col("cvec"),
-        explode(sequence(lit(0), lit(15))).as("sub"))
     val off = col("sub") * dsub + 1
     val sa = slice(col("embedding"), off, lit(dsub))
     val sb = slice(col("cvec"), off, lit(dsub))
-    val composed =
-      cosine(dotDComposed(sa, sb), dotDComposed(sa, sa), dotDComposed(sb, sb))
-    val bad = pairs.filter(
-      !(subCosineFD(col("embedding"), col("cvec"), col("sub"), dsub) <=> composed))
-    assert(bad.count() == 0)
+    val composed = coalesce(
+      cosine(dotDComposed(sa, sb), dotDComposed(sa, sa), dotDComposed(sb, sb)),
+      lit(Double.NegativeInfinity))
+    val viaComposed = shapes.crossJoin(book)
+      .select(col("vec_id"), col("rlabel").cast("long").as("rl"), col("embedding"),
+        col("cvec"), explode(sequence(lit(0), lit(15))).as("sub"))
+      .groupBy(col("vec_id"), col("sub"))
+      .agg(topKBy(composed, col("rl"), 1).getItem(0).getField("id").as("code"))
+    val (labels, books) = graft.ops.Similarity.pqKernelBook(book)
+    val viaKernel = shapes.select(col("vec_id"),
+      posexplode(pqCodesAll(col("embedding"), books, labels, 16, dsub)).as(Seq("sub", "code")))
+    assert(viaKernel.count() == shapes.count() * 16)
+    assert(viaKernel.exceptAll(viaComposed).count() == 0 &&
+      viaComposed.exceptAll(viaKernel).count() == 0)
   }
 
   test("dot-product kernel == composed fold over real embeddings") {

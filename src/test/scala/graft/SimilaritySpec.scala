@@ -305,16 +305,17 @@ class SimilaritySpec extends SparkSpecBase {
     assert(codes.count() == emb.count() * 8)
   }
 
-  test("pqReconstruct concatenates the chosen codewords in subspace order") {
+  test("pqReconstructK concatenates the chosen codewords in subspace order") {
     val emb = Tables.table(spark, sfDir, "embeddings")
     val book = Similarity.pqCodebook(emb)
-    val codes = Similarity.pqEncode(emb, book, m = 8, dsub = 8)
-    val xhat = Similarity.pqReconstruct(codes, book, dsub = 8)
+    val codes = Similarity.pqEncodePacked(emb, book, m = 8, dsub = 8)
+    val (labels, books) = Similarity.pqKernelBook(book)
+    val xhat = codes.select(col("vec_id"),
+      graft.functions.GraftExpressions.pqReconstructK(
+        col("codes").cast("array<long>"), books, labels, 8).as("xhat"))
     val cvecs = book.select(col("rlabel"), col("cvec"))
       .as[(Int, Seq[Double])].collect().toMap
-    val codeMap = codes.as[(Long, Int, Int)].collect()
-      .groupBy(_._1).map { case (v, rows) =>
-        v -> rows.sortBy(_._2).map(_._3) }
+    val codeMap = codes.as[(Long, Seq[Int])].collect().toMap
     val got = xhat.as[(Long, Seq[Double])].collect().toMap
     assert(got.keySet == codeMap.keySet)
     for ((v, cs) <- codeMap) {
@@ -471,14 +472,11 @@ class SimilaritySpec extends SparkSpecBase {
 
   test("ivfPqTopKIndexed prunes reconstruction to the probed cells") {
     import org.apache.spark.sql.catalyst.plans.LeftSemi
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
     val emb = Tables.table(spark, sfDir, "embeddings")
     val cent = Similarity.quantizedCentroids(emb)
     val book = Similarity.pqCodebook(emb)
-    val codes = Similarity.assignClusters(emb, cent, 1)
-      .select(col("vec_id"), col("cluster"))
-      .join(Similarity.pqEncode(emb.select(col("vec_id"), col("embedding")),
-        book, m = 8, dsub = 8), Seq("vec_id"))
+    val codes = graft.ops.AnnIndex.encodeCodes(emb, cent, book, m = 8, dsub = 8)
     // a handful of queries probing a strict subset of cells — the fixture
     // must leave something TO prune, or the assertions prove nothing
     val queries = Similarity.assignClusters(
@@ -487,15 +485,16 @@ class SimilaritySpec extends SparkSpecBase {
     val cells = codes.select("cluster").distinct().count()
     assert(probed < cells, "fixture: queries must not probe every cell")
     val df = Similarity.ivfPqTopKIndexed(codes, queries, book, dsub = 8, k = 3)
-    // structural: the reconstruct aggregate's INPUT carries the LeftSemi
+    // structural: the reconstruction's INPUT carries the LeftSemi
     // cluster prune — Catalyst cannot inject this itself, so its presence
     // in the optimized plan is exactly the candidate-pruned search shape
-    val reconAggs = df.queryExecution.optimizedPlan.collect {
-      case a: Aggregate if a.aggregateExpressions.exists(_.name == "xhat") => a
+    val recons = df.queryExecution.optimizedPlan.collect {
+      case p if p.expressions.exists(_.exists(
+        _.isInstanceOf[graft.functions.GraftExpressions.PqReconstructKExpr])) => p
     }
-    assert(reconAggs.nonEmpty, "no reconstruct aggregate in the plan")
-    assert(reconAggs.forall(a =>
-      a.collect { case j: Join if j.joinType == LeftSemi => j }.nonEmpty),
+    assert(recons.nonEmpty, "no reconstruction in the plan")
+    assert(recons.forall(p =>
+      p.collect { case j: Join if j.joinType == LeftSemi => j }.nonEmpty),
       "reconstruction input is not semi-pruned to the probed clusters")
     // result-invisible: identical to the from-raw scoring path
     val corpus = Similarity.assignClusters(emb, cent, 1)

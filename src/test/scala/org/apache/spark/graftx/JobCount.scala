@@ -1,6 +1,6 @@
 package org.apache.spark.graftx
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Counts the Spark jobs a block runs. The listener bus is private to
@@ -35,5 +35,21 @@ object JobCount {
       sc.setLocalProperty("graftx.jobcount", prev)
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** The bytes of task results the block's jobs shipped to the driver. */
+  def resultBytes[A](spark: SparkSession)(body: => A): (A, Long) = {
+    val sc = spark.sparkContext
+    val bytes = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.resultSize))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.listenerBus.waitUntilEmpty(60000)
+      (out, bytes.get)
+    } finally sc.removeSparkListener(listener)
   }
 }
